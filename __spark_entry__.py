@@ -66,7 +66,7 @@ def q_first_degree_hash(spark, sf_dir):
 
 
 def q_first_degree_hash_exact(spark, sf_dir):
-    """O4 exact (with _:a/_:z substitution), relational fast path."""
+    """O4 exact (with _:a/_:z substitution) in Catalyst."""
     return relational.bnode_first_degree_hash_exact(_quads(spark, sf_dir))
 
 
@@ -113,36 +113,6 @@ def q_canonize_rdfc10(spark, sf_dir):
     quads = build_quads(pages, gazetteer_df(spark))
     return canonize_documents(quads, max_work_factor=3).select(
         "url", "n_quads", "n_bnodes", "input_hash"
-    )
-
-
-def q_canonize_hybrid(spark, sf_dir):
-    """Hybrid router: pure-Catalyst canonicalization for documents with
-    unique exact first-degree hashes, Arrow kernel for the rest.
-
-    The oracle recomputes the routing decision AND the canonical-
-    document hash for sql-routed urls -- the driver byte-verifies the
-    fast path's canonical output end-to-end, not just counts.  Kernel-
-    routed rows surface a null quads_hash_sql (their bytes are golden-
-    checked in tests; the corpus here routes fully sql).
-    """
-    from rdf_canonize_spark.pipeline.canon_stage import (
-        hybrid_canonize_documents,
-    )
-
-    quads = _quads(spark, sf_dir)
-    out = hybrid_canonize_documents(
-        quads, max_work_factor=3, with_routed=True
-    )
-    return out.select(
-        "url",
-        "n_quads",
-        "n_bnodes",
-        "input_hash",
-        "routed",
-        F.when(F.col("routed") == "sql", F.col("quads_hash")).alias(
-            "quads_hash_sql"
-        ),
     )
 
 
@@ -534,13 +504,10 @@ def q_canonize_incremental(spark, sf_dir):
     vs full recompute under real edits is byte-asserted in
     tests/test_pipeline_spark.py.
     """
-    from rdf_canonize_spark.pipeline.incremental import (
-        canonize_with_hash,
-        incremental_canonize,
-    )
+    from rdf_canonize_spark.pipeline.incremental import incremental_canonize
 
     quads = _quads(spark, sf_dir)
-    prior = canonize_with_hash(quads, max_work_factor=3)
+    prior = canonize_documents(quads, max_work_factor=3)
     inc = incremental_canonize(quads, prior, max_work_factor=3)
     return inc.select("url", "n_quads", "input_hash", "recomputed")
 
@@ -1322,7 +1289,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "relabel_quads": q_relabel,
         "canonical_document": q_canonical_document,
         "canonize_rdfc10": q_canonize_rdfc10,
-        "canonize_hybrid": q_canonize_hybrid,
         "entity_degrees": q_entity_degrees,
         "entity_canonical_map": q_entity_canonical_map,
         "entity_canonicalized_quads": q_entity_canonicalized_quads,
@@ -1423,7 +1389,6 @@ def oracle_sql() -> dict[str, str]:
         # input_hash, recomputed); the canonical serialization itself is
         # byte-checked against reference-generated goldens in tests/.
         "canonize_rdfc10": oracles.canonize_partial(),
-        "canonize_hybrid": oracles.canonize_hybrid(),
         "canonize_incremental": oracles.canonize_incremental_partial(),
         "entity_degrees": oracles.entity_degrees(),
         "entity_canonical_map": oracles.canonical_entity_map(),

@@ -263,46 +263,11 @@ def main():
     timings = run_headline(spark, SF_DIR)
     total = round(time.time() - t_total0, 3)
     cores_after = effective_cores_probe()
-    # hybrid router timed AFTER the comparable window (it's a round-2
-    # addition, reported separately)
-    import __spark_entry__ as entrymod
-
-    t0 = time.time()
-    force(entrymod.queries()["canonize_hybrid"](spark, SF_DIR))
-    hybrid_sec = round(time.time() - t0, 3)
     spark.stop()
 
     result["metric"] = "headline query wall-clock at " + SF_DIR
     result["value"] = total
     result["queries"] = timings
-
-    # hybrid-router evidence: fraction of documents taking the
-    # pure-Catalyst fast path (the 100x lever -- Python stays off the
-    # hot path for this fraction of the corpus)
-    spark = get_spark(
-        app_name="bench-router", master=f"local[{CPUS}]",
-        shuffle_partitions=CPUS,
-    )
-    try:
-        from rdf_canonize_spark.operators.relational import (
-            sql_eligible_urls,
-        )
-        from rdf_canonize_spark.pipeline.link import (
-            build_quads, gazetteer_df,
-        )
-        from rdf_canonize_spark.pipeline.pages import pages_from_documents
-
-        quads = build_quads(
-            pages_from_documents(spark, SF_DIR), gazetteer_df(spark)
-        )
-        n_urls = quads.select("url").distinct().count()
-        n_fast = sql_eligible_urls(quads).count()
-        result["hybrid"] = {
-            "fast_fraction": round(n_fast / max(n_urls, 1), 4),
-            "canonize_hybrid_sec": hybrid_sec,
-        }
-    finally:
-        spark.stop()
 
     if DO_SCALING:
         # Same input, same partition count, two parallelism levels.

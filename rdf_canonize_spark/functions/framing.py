@@ -1,10 +1,9 @@
 """Shared quad-row framing for the order-independent input content
-hash.  ONE definition, three consumers that must stay byte-identical:
-the Python kernel (``canon_stage.input_hash_of_rows``), the relational
-aggregation (``incremental.input_quads_hash``), and the hybrid fast
-path (``relational.sql_canonize_documents``); the DuckDB oracle
-(``oracles._FRAMED_LINE``) mirrors it and the ``canonize_incremental``
-driver check pins the parity.
+hash.  ONE definition, two consumers that must stay byte-identical:
+the Python kernel (``canon_stage.input_hash_of_rows``) and the
+relational aggregation (``incremental.input_quads_hash``); the DuckDB
+oracle (``oracles._FRAMED_LINE``) mirrors it and the
+``canonize_incremental`` driver check pins the parity.
 
 Framing: each field byte-length-prefixed (``<len>:<value>``, null ->
 chr(0)), fields joined with chr(31) -- prefix-free, so separator

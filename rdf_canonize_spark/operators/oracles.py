@@ -239,8 +239,8 @@ SELECT url, bnode, first_hash, n_lines FROM first_hash"""
 
 _XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 
-# Exact O4 CTEs (shared by first_degree_hash_exact and the hybrid
-# router oracle): per-(url, bnode) hash with _:a/_:z substitution.
+# Exact O4 CTEs (first_degree_hash_exact): per-(url, bnode) hash with
+# _:a/_:z substitution.
 _FD_CTES = f"""
 pairs AS (
   SELECT DISTINCT * FROM (
@@ -415,119 +415,6 @@ bn AS (
 SELECT nq.url, nq.n_quads, COALESCE(bn.n_bnodes, 0) AS n_bnodes,
        ih.input_hash
 FROM nq JOIN ih USING (url) LEFT JOIN bn USING (url)"""
-
-
-def canonize_hybrid():
-    """Oracle for the hybrid router: recomputes the ROUTING DECISION
-    (serialization-safety regexes + exact-first-degree-hash uniqueness)
-    and, for sql-routed urls, the full canonical-document hash -- so
-    the driver byte-verifies the fast path's canonical output and the
-    router itself, not just row counts.
-
-    Regex patterns are built with chr() concatenation in SQL; the
-    control-char ranges start at chr(1) because DuckDB VARCHARs cannot
-    hold NUL (the Spark side checks from chr(0); no parquet-derived
-    text contains NUL, so the decisions agree)."""
-    return f"""WITH {QUADS_CTE}, {_FD_CTES}, {_INPUT_HASH_CTES},
-bn AS (
-  SELECT url, CAST(COUNT(DISTINCT bnode) AS INT) AS n_bnodes
-  FROM fdh GROUP BY url
-),
-pat AS (
-  SELECT
-    '[' || chr(1) || '-' || chr(31) || chr(127) || chr(34)
-        || chr(92) || chr(92) || ']' AS lit_p,
-    '[' || chr(1) || '-' || chr(32) || '<>' || chr(34) || '{{}}|'
-        || chr(94) || chr(96) || chr(92) || chr(92) || ']' AS iri_p,
-    '[' || chr(92) || 'x{{10000}}-' || chr(92) || 'x{{10FFFF}}]'
-      AS ast_p
-),
-unsafe AS (
-  SELECT url, MAX(CASE WHEN
-      g_kind <> 3
-      OR (s_kind = 0 AND regexp_matches(s, iri_p))
-      OR regexp_matches(p, iri_p)
-      OR (o_kind = 0 AND regexp_matches(o, iri_p))
-      OR (o_kind = 2 AND (
-            regexp_matches(o, lit_p)
-            OR COALESCE(o_lang, 'x') = ''
-            OR regexp_matches(COALESCE(o_lang, ''), lit_p)
-            OR regexp_matches(COALESCE(o_datatype, ''), iri_p)
-            OR COALESCE(o_datatype, '') = '{_XSD_STRING}'
-            OR (o_lang IS NOT NULL
-                AND COALESCE(o_datatype, '') <> '{_LANGSTRING}')))
-      OR regexp_matches(
-           COALESCE(s, '') || COALESCE(p, '') || COALESCE(o, '')
-           || COALESCE(o_datatype, '') || COALESCE(o_lang, ''), ast_p)
-    THEN 1 ELSE 0 END) AS u
-  FROM quads, pat GROUP BY url
-),
-dup AS (
-  SELECT DISTINCT url FROM (
-    SELECT url, first_degree_hash, COUNT(*) AS n
-    FROM fdh GROUP BY url, first_degree_hash
-  ) WHERE n > 1
-),
-routing AS (
-  SELECT u.url,
-    CASE WHEN u.u = 0 AND d.url IS NULL THEN 'sql' ELSE 'kernel' END
-      AS routed
-  FROM unsafe u LEFT JOIN dup d USING (url)
-),
-issued_exact AS (
-  SELECT url, bnode,
-    'c14n' || CAST(ROW_NUMBER() OVER (
-      PARTITION BY url ORDER BY first_degree_hash, bnode
-    ) - 1 AS VARCHAR) AS cid
-  FROM fdh
-),
-relabeled_exact AS (
-  SELECT
-    q.url, q.s_kind,
-    CASE WHEN q.s_kind = 1 AND si.cid IS NOT NULL
-         THEN si.cid ELSE q.s END AS s,
-    q.p, q.o_kind,
-    CASE WHEN q.o_kind = 1 AND oi.cid IS NOT NULL
-         THEN oi.cid ELSE q.o END AS o,
-    q.o_datatype, q.o_lang
-  FROM dquads q
-  LEFT JOIN issued_exact si ON q.url = si.url AND q.s = si.bnode
-  LEFT JOIN issued_exact oi ON q.url = oi.url AND q.o = oi.bnode
-),
-xlines AS (
-  SELECT url,
-    (CASE WHEN s_kind = 0 THEN '<' || s || '>' ELSE '_:' || s END)
-    || ' <' || p || '> '
-    || (CASE
-          WHEN o_kind = 0 THEN '<' || o || '>'
-          WHEN o_kind = 1 THEN '_:' || o
-          ELSE '"' || o || '"' ||
-            (CASE
-               WHEN o_lang IS NOT NULL THEN '@' || o_lang
-               WHEN o_datatype IS NOT NULL
-                 AND o_datatype <> '{_XSD_STRING}'
-                 AND o_datatype <> '{_LANGSTRING}'
-                 THEN chr(94) || chr(94) || '<' || o_datatype || '>'
-               ELSE ''
-             END)
-        END)
-    || ' .' || chr(10) AS nq_line
-  FROM relabeled_exact
-),
-xdocs AS (
-  SELECT url,
-    sha256(string_agg(DISTINCT nq_line, '' ORDER BY nq_line)) AS qh
-  FROM xlines GROUP BY url
-)
-SELECT nq.url, nq.n_quads,
-       COALESCE(bn.n_bnodes, 0) AS n_bnodes,
-       ih.input_hash, r.routed,
-       CASE WHEN r.routed = 'sql' THEN d.qh END AS quads_hash_sql
-FROM nq
-JOIN ih USING (url)
-LEFT JOIN bn USING (url)
-JOIN routing r USING (url)
-LEFT JOIN xdocs d USING (url)"""
 
 
 def canonize_incremental_partial():

@@ -7,17 +7,17 @@ engine level each has a natural distributed form (SURVEY.md section 2
 
 * O2  per-graph distinct            -> ``dedup_quads``
 * O4  hash-first-degree (simplified) -> ``bnode_first_hash``
+* O4  hash-first-degree (exact)      -> ``bnode_first_degree_hash_exact``
 * O5  hash-group + unique detection -> ``hash_groups``
 * O5b issue order (row_number)      -> ``issue_canonical_ids``
 * O11 relabel via label-map join    -> ``relabel_quads``
 * O13 global sort + concat          -> ``canonical_document``
 
-The simplification vs the real algorithm: first-degree hashing here
-serializes *without* the _:a/_:z substitution recursion (pure SQL can't
-do n-degree).  That's why the real canonize stage is an Arrow UDF; these
-analogues exist because at 100 TB you ALSO want the cheap SQL paths for
-the 95%+ of documents whose bnodes are already unique by first-degree
-hash (fast path), reserving the UDF for the rest.
+The simplification vs the real algorithm: pure SQL cannot do the
+n-degree recursion, so these stop at first-degree hashing and issue
+ids in hash order.  That's why the real canonize stage is the Arrow
+kernel in ``pipeline.canon_stage``; these analogues back the contract
+queries and are not on the canonicalization path.
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..rdfc.terms import BLANK, LITERAL, NAMED
+from ..rdfc.terms import BLANK, NAMED
 
 
 def serialize_line(df):
@@ -122,11 +122,8 @@ def bnode_first_degree_hash_exact(quads_df):
     separator -- matching the incremental md.update framing).
 
     Valid whenever values need no N-Quads escaping and contain no
-    astral characters (UTF-8 sort == UTF-16 sort then); on a web corpus
-    that is the overwhelming majority -- this is the relational fast
-    path for the unique-hash case, with the Arrow kernel as the
-    general fallback.  Byte-parity with the Python kernel is asserted
-    in tests.
+    astral characters (UTF-8 sort == UTF-16 sort then).  Byte-parity
+    with the Python kernel's first-degree hashes is asserted in tests.
     """
     q = dedup_quads(quads_df)
     # One scan, one extra shuffle total (the dedup): explode each
@@ -203,197 +200,6 @@ def bnode_first_degree_hash_exact(quads_df):
                 256,
             ).alias("first_degree_hash")
         )
-    )
-
-
-# --- hybrid fast-path router ---------------------------------------------------
-# Serialization-safety character classes (built with chr() arithmetic;
-# see rdfc/nquads.py escape tables): a value that would trigger N-Quads
-# escaping, or an astral character (UTF-16 code-unit sort != UTF-8
-# binary sort), disqualifies its document from the relational path.
-# Literal ECHAR/control set: [\x00-\x1F \x7F " \]
-_LIT_UNSAFE = ("[" + chr(0) + "-" + chr(31) + chr(127) + chr(34)
-               + chr(92) * 2 + "]")
-# IRI escape set: [\x00-\x20 < > " { } | ^ ` \]
-_IRI_UNSAFE = ("[" + chr(0) + "-" + chr(32) + "<>" + chr(34) + "{}|"
-               + chr(94) + chr(96) + chr(92) * 2 + "]")
-_ASTRAL = ("[" + chr(92) + "x{10000}-" + chr(92) + "x{10FFFF}]")
-DEFAULT_GRAPH = 3
-
-
-def _row_unsafe():
-    """Row predicate: true when this quad cannot take the relational
-    fast path (needs escaping, astral chars, a non-default graph, or
-    an empty language tag the kernel would normalize to null)."""
-    lit_unsafe = lambda c: F.coalesce(F.col(c), F.lit("")).rlike(_LIT_UNSAFE)
-    iri_unsafe = lambda c: F.coalesce(F.col(c), F.lit("")).rlike(_IRI_UNSAFE)
-    astral = F.concat_ws(
-        "", *[F.coalesce(F.col(c), F.lit(""))
-              for c in ("s", "p", "o", "o_datatype", "o_lang")]
-    ).rlike(_ASTRAL)
-    return (
-        (F.col("g_kind") != DEFAULT_GRAPH)
-        | ((F.col("s_kind") == NAMED) & iri_unsafe("s"))
-        | iri_unsafe("p")
-        | ((F.col("o_kind") == NAMED) & iri_unsafe("o"))
-        | ((F.col("o_kind") == LITERAL)
-           & (lit_unsafe("o")
-              | (F.coalesce(F.col("o_lang"), F.lit("x")) == "")
-              | lit_unsafe("o_lang")
-              | iri_unsafe("o_datatype")
-              # explicit xsd:string normalizes to null datatype in the
-              # kernel; a doc mixing both forms of the same quad would
-              # double-count lines in the relational exact-hash
-              # aggregation -- route such docs to the kernel
-              | (F.coalesce(F.col("o_datatype"), F.lit(""))
-                 == "http://www.w3.org/2001/XMLSchema#string")
-              # a language tag WITHOUT rdf:langString datatype: the
-              # kernel normalizes null datatype to xsd:string and its
-              # serializer then DROPS the tag, while serialize_line
-              # would keep it -- byte divergence, route to the kernel
-              | (F.col("o_lang").isNotNull()
-                 & (F.coalesce(F.col("o_datatype"), F.lit(""))
-                    != "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"))))
-        | astral
-    )
-
-
-def sql_eligible_urls(quads_df, fh=None):
-    """Urls eligible for the pure-Catalyst canonicalization fast path:
-    every quad is serialization-safe AND every blank node's EXACT
-    first-degree hash is unique within the document (RDFC-1.0 then
-    never enters n-degree hashing: canonical ids issue directly in
-    first-degree-hash order).  On a web corpus this is the
-    overwhelming majority of documents -- the 100x lever that keeps
-    the Python kernel off the hot path.
-
-    Shape: one map-side-combinable groupBy for safety + the exact-hash
-    aggregation (itself 2 shuffles) + an aggregated uniqueness check;
-    all shuffles carry url-keyed narrow rows.  Pass a precomputed
-    ``fh`` (``bnode_first_degree_hash_exact`` output, possibly
-    checkpointed) to share it with the issuance stage.
-    """
-    safety = (
-        quads_df.select("url", _row_unsafe().cast("int").alias("u"))
-        .groupBy("url")
-        .agg((F.max("u") == 0).alias("safe"))
-    )
-    if fh is None:
-        fh = bnode_first_degree_hash_exact(quads_df)
-    dup_urls = (
-        fh
-        .groupBy("url", "first_degree_hash")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-        .select("url")
-        .distinct()
-    )
-    return (
-        safety.filter(F.col("safe"))
-        .join(dup_urls, "url", "left_anti")
-        .select("url")
-    )
-
-
-def sql_canonize_documents(quads_df, fh=None):
-    """RDFC-1.0 entirely in Catalyst, VALID ONLY for
-    ``sql_eligible_urls`` documents: unique exact first-degree hashes
-    mean canonical ids issue in hash order with no n-degree recursion,
-    and serialization-safety means the simple serializer and binary
-    sort are byte-identical to the kernel's escaped UTF-16 forms.
-    Byte-equality with the Arrow kernel is asserted in tests.
-
-    Output matches CANONICAL_SCHEMA exactly, ``input_hash`` included:
-    the per-row framing digest rides through the relabel join and the
-    hash folds into the SAME per-url aggregation as the canonical
-    document -- no separate groupBy+join (framing is injective on the
-    quad columns and the rollup collapses duplicate digests, so
-    computing it on deduped rows equals the raw-row definition).
-
-    ``fh`` may be the FULL corpus's exact-hash table even when
-    ``quads_df`` is the eligible subset: the per-url hash is a pure
-    function of that url's quads, and the output joins restrict to
-    ``quads_df``'s urls.
-    """
-    from ..functions.framing import framed_line, input_hash_agg
-
-    if fh is None:
-        fh = bnode_first_degree_hash_exact(quads_df)
-    w = Window.partitionBy("url").orderBy("first_degree_hash")
-    ids = fh.select(
-        "url",
-        "bnode",
-        F.concat(
-            F.lit("c14n"), (F.row_number().over(w) - 1).cast("string")
-        ).alias("cid"),
-    )
-    id_map = ids.groupBy("url").agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("bnode", "cid"))
-        ).alias("label_map")
-    )
-    # No explicit distinct: duplicate raw rows serialize to identical
-    # lines and frame to identical digests, and BOTH per-url
-    # aggregations below are set-collapsing -- the O2 dedup falls out
-    # of the aggregation for free (one fewer full-width shuffle).
-    q = quads_df.withColumn("qh", F.sha2(framed_line(), 256))
-    j = q.join(id_map, "url", "left")
-
-    def sub(kind_col, val_col):
-        repl = F.try_element_at(F.col("label_map"), F.col(val_col))
-        return F.when(
-            (F.col(kind_col) == BLANK) & repl.isNotNull(), repl
-        ).otherwise(F.col(val_col))
-
-    relabeled = j.select(
-        "url",
-        "s_kind",
-        sub("s_kind", "s").alias("s"),
-        "p",
-        "o_kind",
-        sub("o_kind", "o").alias("o"),
-        "o_datatype",
-        "o_lang",
-        "g_kind",
-        "g",
-        "qh",
-    )
-    lines = serialize_line(relabeled)
-    # collect_set: raw-distinct rows that NORMALIZE to the same quad
-    # (datatype null vs xsd:string) collapse at line level, matching
-    # the kernel's dataset dedup; within eligible docs serialization
-    # is injective, so |distinct lines| == kernel n_quads.
-    per_url = lines.groupBy("url").agg(
-        F.concat_ws(
-            "",
-            F.transform(
-                F.sort_array(F.collect_set("nq_line")),
-                lambda x: F.concat(x, F.lit(chr(10))),
-            ),
-        ).alias("nquads"),
-        F.size(F.collect_set("nq_line")).alias("n_quads"),
-        input_hash_agg().alias("input_hash"),
-    )
-    out = per_url.join(id_map, "url", "left").select(
-        "url",
-        "nquads",
-        F.coalesce(
-            F.col("label_map"),
-            F.expr("map()").cast("map<string,string>"),
-        ).alias("label_map"),
-        F.col("n_quads").cast("int").alias("n_quads"),
-        "input_hash",
-    )
-    return out.select(
-        "url",
-        "nquads",
-        "label_map",
-        "n_quads",
-        F.size("label_map").cast("int").alias("n_bnodes"),
-        F.lit(0).cast("long").alias("deep_iterations"),
-        F.sha2(F.col("nquads"), 256).alias("quads_hash"),
-        F.lit(None).cast("string").alias("error"),
-        "input_hash",
     )
 
 

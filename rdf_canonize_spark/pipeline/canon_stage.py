@@ -1,29 +1,32 @@
-"""Per-document RDFC-1.0 canonicalization as a grouped-map Arrow UDF.
+"""Per-document RDFC-1.0 canonicalization as a ``mapInArrow`` kernel.
 
-``quads_df.groupBy('url').applyInPandas(...)`` -- each document's RDF
-dataset canonicalizes independently and partition-parallel.  This is
-the one stage that genuinely cannot be expressed in DataFrame algebra:
-hash-n-degree-quads is sequential, stateful, recursive, and
-data-dependent (see SURVEY.md O9), exactly what grouped-map UDFs are
-for.  Everything around it stays in Catalyst.
+``quads_df.select(...).sortWithinPartitions('url').mapInArrow(...)`` --
+each document's RDF dataset canonicalizes independently and
+partition-parallel.  This is the one stage that genuinely cannot be
+expressed in DataFrame algebra: hash-n-degree-quads is sequential,
+stateful, recursive, and data-dependent (see SURVEY.md O9), exactly
+what a Python UDF is for.  Everything around it stays in Catalyst.
 
 Scale properties:
 
-* state is strictly per-group -- no global index, no driver collect;
-* a poison document raises inside its group only; the error is caught
-  and routed to the ``error`` column (quarantine), never failing the
-  job or stalling an executor (work budget enforced by max_work_factor);
-* output is a pure function of the group's rows -- content-deterministic
-  under re-partitioning (all reference-visible orderings are sorted);
-* group size is bounded upstream (documents are pages, not the corpus);
-  ``spark.sql.execution.arrow.maxRecordsPerBatch`` caps Arrow batches.
+* state is strictly per-document -- no global index, no driver collect;
+* a poison document raises inside its own kernel call only; the error
+  is caught and routed to the ``error`` column (quarantine), never
+  failing the job or stalling an executor (work budget enforced by
+  max_work_factor);
+* output is a pure function of the document's rows -- content-
+  deterministic under re-partitioning (all reference-visible orderings
+  are sorted);
+* document size is bounded upstream (documents are pages, not the
+  corpus); ``spark.sql.execution.arrow.maxRecordsPerBatch`` caps Arrow
+  batches, and a document straddling a batch boundary is carried into
+  the next batch.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -140,60 +143,6 @@ def rows_to_dataset(rows):
     return dataset
 
 
-def make_canonize_fn(max_work_factor=3):
-    """Build the grouped-map function (serialized to executors)."""
-
-    cols = [
-        "s_kind", "s", "p", "o_kind", "o",
-        "o_datatype", "o_lang", "g_kind", "g",
-    ]
-
-    def canonize_group(key, pdf):
-        url = key[0]
-        rows = list(pdf[cols].itertuples(index=False, name=None))
-        input_hash = input_hash_of_rows(rows)
-        dataset = rows_to_dataset(rows)
-        n_bnodes = len(
-            {
-                t[1]
-                for q in dataset
-                for t in (q[0], q[2], q[3])
-                if t[0] == BLANK
-            }
-        )
-        id_map = {}
-        engine = RDFC10(
-            canonical_id_map=id_map, max_work_factor=max_work_factor
-        )
-        try:
-            nquads = engine.main(dataset)
-            error = None
-        except Exception as e:  # budget/timeout -> quarantine row
-            nquads = None
-            id_map = None
-            error = str(e)
-        quads_hash = hashlib.sha256(
-            nquads.encode("utf-8", "surrogatepass")
-        ).hexdigest() if nquads is not None else None
-        return pd.DataFrame(
-            [
-                {
-                    "url": url,
-                    "nquads": nquads,
-                    "label_map": id_map,
-                    "n_quads": len(dataset),
-                    "n_bnodes": n_bnodes,
-                    "deep_iterations": engine.deep_iterations_used,
-                    "quads_hash": quads_hash,
-                    "error": error,
-                    "input_hash": input_hash,
-                }
-            ]
-        )
-
-    return canonize_group
-
-
 OVERSIZED_PREFIX = "Document exceeds maximum quad count"
 
 
@@ -262,79 +211,17 @@ _COLS = ["s_kind", "s", "p", "o_kind", "o",
          "o_datatype", "o_lang", "g_kind", "g"]
 
 
-def make_canonize_map_fn(max_work_factor=3, max_doc_quads=0):
-    """``mapInPandas`` kernel: many documents per Arrow batch.
-
-    Requires rows sorted by url within each partition and each url
-    wholly contained in one partition.  A url whose rows straddle an
-    Arrow-batch boundary is carried into the next batch; batch
-    boundaries never split a document's output.
-
-    This is the scale path: ``applyInPandas`` pays per-group overhead
-    (one Python call + frame per document), which dominates when
-    documents are small -- the common case in web corpora.  Here the
-    per-document cost is one dict append.
-    """
-
-    def canonize_partition(batches):
-        carry = None
-
-        def process(pdf):
-            out = []
-            url_col = pdf["url"].values
-            col_vals = [pdf[c].values for c in _COLS]
-            cur_url = None
-            cur_rows = []
-            for i in range(len(pdf)):
-                u = url_col[i]
-                if u != cur_url:
-                    if cur_url is not None:
-                        out.append(
-                            _canonize_rows_for_url(
-                                cur_url, cur_rows, max_work_factor,
-                                max_doc_quads=max_doc_quads,
-                            )
-                        )
-                    cur_url, cur_rows = u, []
-                cur_rows.append(tuple(v[i] for v in col_vals))
-            if cur_url is not None:
-                out.append(
-                    _canonize_rows_for_url(cur_url, cur_rows,
-                                           max_work_factor,
-                                           max_doc_quads=max_doc_quads)
-                )
-            return pd.DataFrame(out)
-
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            last_url = pdf["url"].iat[len(pdf) - 1]
-            mask = pdf["url"] == last_url
-            carry = pdf[mask]
-            complete = pdf[~mask]
-            if len(complete):
-                yield process(complete)
-        if carry is not None and len(carry):
-            yield process(carry)
-
-    return canonize_partition
-
-
 def make_canonize_arrow_fn(max_work_factor=3, doc_timeout_ms=0,
                            max_doc_quads=0,
                            message_digest_algorithm="sha256",
                            kernel_fn=None):
     """``mapInArrow`` kernel: pyarrow batches in and out, no pandas.
 
-    Same contract as the pandas kernel (url-sorted partitions, urls not
-    split across partitions), but the Arrow<->Python boundary is raw
-    ``to_pylist`` / ``RecordBatch.from_arrays`` -- measured ~2-3x less
-    overhead than the pandas conversion for this row shape, which
-    matters because transport, not canonicalization, is the stage's
-    marginal cost for small documents.
+    Requires rows sorted by url within each partition and each url
+    wholly contained in one partition.  A url whose rows straddle an
+    Arrow-batch boundary is carried into the next batch, so batch
+    boundaries never split a document's output.  The Arrow<->Python
+    boundary is raw ``to_pylist`` / ``RecordBatch.from_arrays``.
     """
     import pyarrow as pa
 
@@ -415,29 +302,9 @@ def make_canonize_arrow_fn(max_work_factor=3, doc_timeout_ms=0,
     return canonize_partition
 
 
-# Measured hybrid/kernel crossover (tools/head2head A/B, SCALE.md): at
-# low parallelism the JVM-side hybrid router wins because per-core
-# Python kernel throughput is the bottleneck (router 1.50x faster at
-# local[2], 1.19x at local[4]); at high parallelism the Arrow kernel
-# wins because its zero-shuffle colocated stage outscales the router's
-# eligibility joins (kernel 1/0.75x faster at local[32]).  The router
-# margin shrinks ~1.5 -> ~1.2 from 2 to 4 cores, extrapolating to
-# parity around 8 -- so 'auto' routes below that to the hybrid and at
-# or above it to the kernel.
-AUTO_HYBRID_MAX_CORES = 7
-
-
-def select_canonize_strategy(cores):
-    """The 'auto' heuristic as a pure function (pinned by tests on
-    both measured regimes): 'hybrid' when the session has few cores,
-    'colocated' (Arrow kernel) otherwise."""
-    return "hybrid" if cores <= AUTO_HYBRID_MAX_CORES else "colocated"
-
-
 def canonize_documents(
     quads_df,
     max_work_factor=3,
-    num_partitions=None,
     strategy="colocated",
     doc_timeout_ms=0,
     max_doc_quads=0,
@@ -445,6 +312,19 @@ def canonize_documents(
     kernel_fn=None,
 ):
     """quads -> canonical_nquads(url, nquads, label_map, ...).
+
+    One path: ``select -> sortWithinPartitions('url') ->
+    mapInArrow(make_canonize_arrow_fn)``.  ``strategy`` only decides
+    whether the input is hash-repartitioned by url first:
+
+    * ``'colocated'`` (default) -- zero-shuffle.  Valid when each url's
+      quads already live in one partition, which ``build_quads``
+      guarantees (narrow explode + broadcast joins over one pages
+      scan).  At 100 TB this saves the single biggest cost in the job:
+      a full shuffle of the quad table.
+    * ``'repartition'`` -- generic inputs: hash-repartition on url into
+      ``defaultParallelism`` partitions first.  url is high-cardinality
+      and uniform, so no skew handling is needed on this key.
 
     ``kernel_fn``: swap-in per-document canonicalization kernel -- the
     Spark counterpart of the reference's native-implementation
@@ -454,183 +334,22 @@ def canonize_documents(
     tuples in, same CANONICAL_SCHEMA dict out); the callable is
     serialized to executors, so an accelerated implementation (e.g. a
     C/Rust extension imported inside the function) plugs in without
-    touching the Spark plumbing.  Arrow-kernel strategies only.
-
-    Strategies:
-
-    * ``'colocated'`` (default) -- zero-shuffle: ``sortWithinPartitions
-      ('url')`` (partition-local sort) + ``mapInPandas``.  Valid when
-      each url's quads already live in one partition, which
-      ``build_quads`` guarantees (narrow explode + broadcast joins over
-      one pages scan).  At 100 TB this saves the single biggest cost in
-      the job: a full shuffle of the quad table.
-    * ``'repartition'`` -- generic inputs: hash-repartition on url
-      first, then the same batched kernel.  url is high-cardinality and
-      uniform, so no skew handling is needed on this key.
-    * ``'grouped'`` -- reference-shaped ``groupBy.applyInPandas``; one
-      Python call per document.  Kept for differential testing.
-    * ``'auto'`` -- pick per the measured crossover
-      (``select_canonize_strategy``): the hybrid SQL router on
-      low-core sessions, the colocated Arrow kernel otherwise.  Both
-      arms produce identical bytes (pinned by
-      test_hybrid_router_byte_equals_kernel), so the choice is purely
-      a throughput decision.
+    touching the Spark plumbing.
     """
-    if strategy == "auto":
-        cores = quads_df.sparkSession.sparkContext.defaultParallelism
-        if select_canonize_strategy(cores) == "hybrid":
-            return hybrid_canonize_documents(
-                quads_df,
-                max_work_factor=max_work_factor,
-                num_partitions=num_partitions,
-                doc_timeout_ms=doc_timeout_ms,
-                max_doc_quads=max_doc_quads,
-                message_digest_algorithm=message_digest_algorithm,
-                kernel_fn=kernel_fn,
-            )
-        strategy = "colocated"
-    if message_digest_algorithm != "sha256" and strategy not in (
-        "colocated", "repartition"
-    ):
-        # only the Arrow kernel is digest-parameterized; refuse rather
-        # than silently hash with the wrong algorithm
-        raise ValueError(
-            "non-sha256 digests require the 'colocated' or "
-            "'repartition' strategy"
-        )
-    if kernel_fn is not None and strategy not in (
-        "colocated", "repartition"
-    ):
-        raise ValueError(
-            "kernel_fn requires the 'colocated' or 'repartition' "
-            "strategy (the Arrow kernel surface)"
-        )
-    # refuse rather than silently ignore (same contract as the digest
-    # guard): only the Arrow kernel implements the per-document
-    # timeout, and the grouped strategy has no quad cap either
-    if doc_timeout_ms and strategy not in ("colocated", "repartition"):
-        raise ValueError(
-            "doc_timeout_ms requires the 'colocated' or 'repartition' "
-            "strategy"
-        )
-    if max_doc_quads and strategy == "grouped":
-        raise ValueError(
-            "max_doc_quads is not implemented for the 'grouped' "
-            "strategy (use colocated/colocated_pandas/repartition)"
-        )
-    if strategy == "grouped":
-        df = quads_df
-        if num_partitions:
-            df = df.repartition(num_partitions, "url")
-        return df.groupBy("url").applyInPandas(
-            make_canonize_fn(max_work_factor), CANONICAL_SCHEMA
-        )
     if strategy == "repartition":
         df = quads_df.repartition(
-            num_partitions or quads_df.sparkSession.sparkContext
-            .defaultParallelism,
-            "url",
+            quads_df.sparkSession.sparkContext.defaultParallelism, "url"
         )
-    elif strategy in ("colocated", "colocated_pandas"):
+    elif strategy == "colocated":
         df = quads_df
     else:
         raise ValueError(f"unknown strategy: {strategy}")
-    df = df.select("url", *_COLS).sortWithinPartitions("url")
-    if strategy == "colocated_pandas":
-        return df.mapInPandas(
-            make_canonize_map_fn(max_work_factor, max_doc_quads),
-            CANONICAL_SCHEMA,
-        )
-    return df.mapInArrow(
+    return df.select("url", *_COLS).sortWithinPartitions("url").mapInArrow(
         make_canonize_arrow_fn(max_work_factor, doc_timeout_ms,
                                max_doc_quads, message_digest_algorithm,
                                kernel_fn),
         CANONICAL_SCHEMA,
     )
-
-
-def hybrid_canonize_documents(quads_df, max_work_factor=3,
-                              with_routed=False, **kwargs):
-    """Hybrid router: pure-Catalyst canonicalization for documents
-    whose blank nodes are unique by exact first-degree hash (and
-    serialization-safe), the Arrow kernel for the rest.
-
-    On a web corpus the fast-path fraction is the overwhelming
-    majority, and the relational form never crosses the Python
-    boundary -- at 100x scale this keeps Arrow transport (the kernel
-    stage's marginal cost, see make_canonize_arrow_fn) off the hot
-    path entirely for most documents.  Byte-equality of the two paths
-    on eligible documents is asserted in tests and (for the canonical
-    hash) by the canonize_hybrid driver oracle.
-
-    The routing join is url-keyed; its output is co-located by url
-    either way (sort-merge partitions by url; a broadcast keeps the
-    input's already-co-located layout), so the kernel's input contract
-    holds for the slow branch with no extra exchange.
-
-    ``max_doc_quads`` (via kwargs) is applied AT ROUTING TIME: a
-    document over the cap is excluded from the fast path regardless of
-    hash uniqueness, so it hits the kernel's mega-document guard and
-    gets the same oversized-quarantine row ``canonize_documents``
-    emits -- the output contract is identical between the two
-    entrypoints for every input.  ``doc_timeout_ms`` applies to the
-    kernel branch only: sql-routed documents never enter n-degree
-    recursion (work is linear in quads and already bounded by the
-    quad cap), so a per-document timeout has nothing to bound there.
-    """
-    from ..operators import relational
-
-    if (
-        kwargs.get("message_digest_algorithm", "sha256") != "sha256"
-        or kwargs.get("kernel_fn") is not None
-    ):
-        # the relational fast path is sha256-only and kernel_fn by
-        # definition bypasses it: route EVERYTHING through the kernel
-        # rather than emit a silently mixed-algorithm union
-        out = canonize_documents(
-            quads_df, max_work_factor=max_work_factor, **kwargs
-        )
-        if with_routed:
-            out = out.withColumn("routed", F.lit("kernel"))
-        return out
-
-    # the exact first-degree hash table feeds BOTH the routing
-    # uniqueness check and the fast path's id issuance -- materialize
-    # once (narrow url/bnode/hash rows, far smaller than the quads)
-    fh = relational.bnode_first_degree_hash_exact(
-        quads_df
-    ).localCheckpoint()
-    # both branches hang off the eligibility join -- checkpoint the
-    # slim url list so the safety/duplicate aggregations run once,
-    # not once per branch
-    eligible = relational.sql_eligible_urls(quads_df, fh=fh)
-    max_doc_quads = kwargs.get("max_doc_quads", 0)
-    if max_doc_quads:
-        # route oversized documents (pre-dedup row count, matching the
-        # kernel's memory-bound semantics) to the kernel's quarantine
-        oversized = (
-            quads_df.groupBy("url")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > max_doc_quads)
-            .select("url")
-        )
-        eligible = eligible.join(oversized, "url", "left_anti")
-    eligible = eligible.localCheckpoint()
-    flagged = quads_df.join(
-        eligible.withColumn("__fast", F.lit(True)), "url", "left"
-    )
-    fast_q = flagged.filter(F.col("__fast")).drop("__fast")
-    slow_q = flagged.filter(F.col("__fast").isNull()).drop("__fast")
-    cols = [f.name for f in CANONICAL_SCHEMA.fields]
-    fast = relational.sql_canonize_documents(fast_q, fh=fh)
-    slow = canonize_documents(
-        slow_q, max_work_factor=max_work_factor, **kwargs
-    )
-    if with_routed:  # expose the routing decision (no extra work)
-        fast = fast.withColumn("routed", F.lit("sql"))
-        slow = slow.withColumn("routed", F.lit("kernel"))
-        cols = cols + ["routed"]
-    return fast.select(*cols).unionByName(slow.select(*cols))
 
 
 def split_canonical(canonical_df):

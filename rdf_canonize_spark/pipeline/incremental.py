@@ -66,18 +66,12 @@ def input_quads_hash(quads_df):
     )
 
 
-def canonize_with_hash(quads_df, **kwargs):
-    """Full canonize incl. the ``input_hash`` column (the shape prior
-    runs feed back into ``incremental_canonize``).  The hash is
-    computed inside the kernel -- no extra join or shuffle."""
-    return canonize_documents(quads_df, **kwargs)
-
-
 def incremental_canonize(quads_df, prior_df, broadcast_changed=True,
                          **kwargs):
     """Canonical output for the new crawl, recomputing only documents
     whose input quads changed since ``prior_df`` (a previous
-    ``canonize_with_hash`` output).  Adds ``recomputed: boolean``.
+    ``canonize_documents`` output, which carries ``input_hash``).
+    Adds ``recomputed: boolean``.
 
     ``broadcast_changed``: broadcast the changed-url set into the
     fresh-path semi-join (right for a recrawl, where changed is a

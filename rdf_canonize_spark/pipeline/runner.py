@@ -2,11 +2,12 @@
 
 pages -> [extract: Catalyst regexp] -> mentions
       -> [link: broadcast gazetteer join] -> quads
-      -> [canonize: groupBy(url).applyInPandas(RDFC-1.0)] -> canonical
+      -> [canonize: sortWithinPartitions(url).mapInArrow(RDFC-1.0)]
+      -> canonical
       -> [materialize: edges/nodes/lineage/metrics (+ checkpointed writes)]
 
 Control crosses the JVM<->Python boundary exactly once (the canonize
-grouped-map UDF); everything else is whole-stage-codegen relational.
+Arrow kernel); everything else is whole-stage-codegen relational.
 """
 
 from __future__ import annotations
@@ -30,30 +31,19 @@ def run_pipeline(
     out_dir=None,
     batch_id=0,
     extract_fn=None,
-    strategy="colocated",
 ):
     """Run the full pipeline; returns a dict of result DataFrames.
 
     With ``out_dir`` set, performs the checkpointed write (resuming past
-    completed urls from the manifest).  ``strategy`` passes through to
-    ``canonize_documents`` ('colocated' default; 'auto' applies the
-    measured hybrid/kernel core-count crossover; 'hybrid' etc. as
-    documented there).
+    completed urls from the manifest).  ``build_quads`` output is
+    url-colocated, so canonicalization is the zero-shuffle 'colocated'
+    path.
     """
     gaz = gazetteer_df(spark)
     if out_dir:
         pages_df = resume_filter(spark, pages_df, out_dir)
     quads = build_quads(pages_df, gaz, extract_fn=extract_fn)
-    if strategy == "hybrid":
-        from .canon_stage import hybrid_canonize_documents
-
-        canonical = hybrid_canonize_documents(
-            quads, max_work_factor=max_work_factor
-        )
-    else:
-        canonical = canonize_documents(
-            quads, max_work_factor=max_work_factor, strategy=strategy
-        )
+    canonical = canonize_documents(quads, max_work_factor=max_work_factor)
     results = {
         "quads": quads,
         "canonical": canonical,

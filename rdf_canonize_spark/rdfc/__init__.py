@@ -1,7 +1,7 @@
 """Pure-Python RDFC-1.0 canonicalization core (no Spark dependency).
 
 This package is the kernel executed per document inside the Spark
-``groupBy('url').applyInPandas`` canonicalization stage, and is also
+``mapInArrow`` canonicalization stage, and is also
 usable standalone as a drop-in equivalent of the reference
 digitalbazaar/rdf-canonize API.
 """

@@ -21,7 +21,7 @@ All sorts that the reference performs with JS ``Array.sort()`` use
 UTF-16 code-unit order; all hash inputs are encoded like Node's utf8
 encoder (lone surrogates -> U+FFFD).  This module is pure Python with no
 Spark dependency -- it is the kernel executed per document inside the
-``groupBy('url').applyInPandas`` stage.
+``mapInArrow`` canonize stage (``pipeline.canon_stage``).
 """
 
 from __future__ import annotations

@@ -4,7 +4,7 @@ Settings chosen for the 100 TB design point (see README):
 
 * AQE on -- runtime shuffle coalescing + skew-join splitting.
 * Arrow on with a bounded ``maxRecordsPerBatch`` so a pathological
-  document cannot blow executor memory inside ``applyInPandas``.
+  document cannot blow executor memory inside the canonize kernel.
 * ``shuffle.partitions`` sized per run (tests pass 32 to match the
   local[32] harness; a real cluster would use 2-3x total cores).
 """

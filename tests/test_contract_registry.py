@@ -72,7 +72,7 @@ PRIORITY_PREFIX = [
 def test_registry_shape_and_priority_prefix():
     qs = entrymod.queries()
     names = list(qs)
-    assert len(names) == len(set(names)) == 100
+    assert len(names) == len(set(names)) == 99
     assert names[: len(PRIORITY_PREFIX)] == PRIORITY_PREFIX
     assert all(callable(fn) for fn in qs.values())
 

@@ -1,9 +1,9 @@
 """End-to-end Spark pipeline tests.
 
-The load-bearing check: the ``groupBy('url').applyInPandas`` canonize
-stage must produce, for every document, byte-identical canonical
-N-Quads to the pure-Python core run standalone on that document's
-quads (which is itself differential-tested against the reference).
+The load-bearing check: the ``mapInArrow`` canonize stage must
+produce, for every document, byte-identical canonical N-Quads to the
+pure-Python core run standalone on that document's quads (which is
+itself differential-tested against the reference).
 """
 
 import pandas as pd
@@ -11,6 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from rdf_canonize_spark.pipeline.canon_stage import (
+    CANONICAL_SCHEMA,
+    _canonize_rows_for_url,
     canonize_documents,
     rows_to_dataset,
 )
@@ -99,29 +101,63 @@ def test_spark_canonical_matches_pure_python(results):
         assert got_map == id_map, url
 
 
+def _canon_key(r):
+    return (r["nquads"], dict(r["label_map"] or {}), r["n_quads"],
+            r["n_bnodes"], r["deep_iterations"], r["quads_hash"],
+            r["input_hash"], r["error"])
+
+
+def _grouped_reference(quads_df, max_work_factor=3):
+    """Reference-shaped differential: ``groupBy('url').applyInPandas``
+    with one Python call per document around the same per-document
+    kernel -- no partition layout, sort order or Arrow batching of the
+    production path is involved."""
+    cols = ["s_kind", "s", "p", "o_kind", "o",
+            "o_datatype", "o_lang", "g_kind", "g"]
+
+    def canonize_group(key, pdf):
+        rows = list(pdf[cols].itertuples(index=False, name=None))
+        return pd.DataFrame(
+            [_canonize_rows_for_url(key[0], rows, max_work_factor)]
+        )
+
+    return quads_df.groupBy("url").applyInPandas(
+        canonize_group, CANONICAL_SCHEMA
+    )
+
+
 def test_canonical_output_is_repartition_invariant(spark, results):
     """Content determinism: canonize after an adversarial repartition
-    and shuffled row order; outputs must be identical."""
+    and shuffled row order; outputs must be identical.  The Arrow legs
+    run with tiny Arrow batches so documents straddle batch boundaries
+    and the kernel's cross-batch document carry is exercised."""
     quads = results["quads"]
     # round-robin repartition scatters a url's rows across partitions;
     # the generic 'repartition' strategy must regroup and still match
     shuffled = quads.repartition(13).sortWithinPartitions("o", "p")
-    a = {
-        r["url"]: r["nquads"]
-        for r in canonize_documents(quads, max_work_factor=3).collect()
-    }
-    b = {
-        r["url"]: r["nquads"]
-        for r in canonize_documents(
-            shuffled, max_work_factor=3, strategy="repartition"
-        ).collect()
-    }
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "5")
+    try:
+        a = {
+            r["url"]: _canon_key(r)
+            for r in canonize_documents(quads, max_work_factor=3).collect()
+        }
+        b = {
+            r["url"]: _canon_key(r)
+            for r in canonize_documents(
+                shuffled, max_work_factor=3, strategy="repartition"
+            ).collect()
+        }
+    finally:
+        spark.conf.set(key, prev)
     c = {
-        r["url"]: r["nquads"]
-        for r in canonize_documents(
-            shuffled, max_work_factor=3, strategy="grouped"
-        ).collect()
+        r["url"]: _canon_key(r)
+        for r in _grouped_reference(shuffled).collect()
     }
+    # documents larger than one batch exist, so some must straddle
+    assert max(k[2] for k in c.values()) > 5
+    assert len(a) == N_PAGES
     assert a == b
     assert a == c
 
@@ -299,14 +335,11 @@ def test_incremental_canonize_recomputes_only_changed(spark, pages):
     """Recrawl path: unchanged documents carry forward byte-identically
     with zero kernel work; changed documents recompute; the combined
     output equals a full recanonicalization."""
-    from rdf_canonize_spark.pipeline.incremental import (
-        canonize_with_hash,
-        incremental_canonize,
-    )
+    from rdf_canonize_spark.pipeline.incremental import incremental_canonize
     from rdf_canonize_spark.pipeline.link import build_quads, gazetteer_df
 
     quads1 = build_quads(pages, gazetteer_df(spark)).cache()
-    prior = canonize_with_hash(quads1, max_work_factor=3).cache()
+    prior = canonize_documents(quads1, max_work_factor=3).cache()
 
     # "recrawl": ~1/6 of documents gain one extra statement quad
     changed = quads1.select("url").distinct().filter(
@@ -331,7 +364,7 @@ def test_incremental_canonize_recomputes_only_changed(spark, pages):
     assert inc.filter("recomputed").count() == n_changed
     assert inc.count() == prior.count()
 
-    full2 = canonize_with_hash(
+    full2 = canonize_documents(
         quads2, max_work_factor=3, strategy="repartition"
     )
     a = {r["url"]: (r["nquads"], r["quads_hash"], r["input_hash"])
@@ -340,38 +373,6 @@ def test_incremental_canonize_recomputes_only_changed(spark, pages):
          for r in full2.collect()}
     assert a == b
     quads1.unpersist(); prior.unpersist(); inc.unpersist()
-
-
-def test_auto_strategy_selection(spark, pages):
-    """strategy='auto' encodes the measured hybrid/kernel crossover:
-    hybrid router below 8 cores (router wins 1.50x at local[2], 1.19x
-    at local[4]), colocated Arrow kernel at or above (kernel wins at
-    local[32]) -- pinned on both regimes via the pure heuristic, plus
-    an integration check that the local[4] test session actually
-    dispatches to the hybrid plan and matches the kernel's bytes."""
-    from rdf_canonize_spark.pipeline.canon_stage import (
-        select_canonize_strategy,
-    )
-    from rdf_canonize_spark.pipeline.link import build_quads, gazetteer_df
-
-    for cores, want in ((1, "hybrid"), (2, "hybrid"), (4, "hybrid"),
-                        (8, "colocated"), (32, "colocated")):
-        assert select_canonize_strategy(cores) == want, cores
-
-    quads = build_quads(pages, gazetteer_df(spark)).cache()
-    auto = canonize_documents(quads, max_work_factor=3, strategy="auto")
-    kernel = canonize_documents(quads, max_work_factor=3)
-    # the local[4] session must have dispatched to the hybrid router:
-    # its plan is a Union of the SQL fast path and the kernel branch
-    assert spark.sparkContext.defaultParallelism == 4
-    auto_plan = auto._jdf.queryExecution().analyzed().toString()
-    kernel_plan = kernel._jdf.queryExecution().analyzed().toString()
-    assert "Union" in auto_plan
-    assert "Union" not in kernel_plan
-    a = {r["url"]: _canon_key(r) for r in auto.collect()}
-    b = {r["url"]: _canon_key(r) for r in kernel.collect()}
-    assert a == b
-    quads.unpersist()
 
 
 def test_lone_surrogate_input_hash_parity(spark):
@@ -421,85 +422,6 @@ def test_lone_surrogate_input_hash_parity(spark):
     assert inc[0]["recomputed"] is False, (
         "lone-surrogate row silently flipped to recomputed=true"
     )
-
-
-def _canon_key(r):
-    return (r["nquads"], dict(r["label_map"] or {}), r["n_quads"],
-            r["n_bnodes"], r["deep_iterations"], r["quads_hash"],
-            r["input_hash"], r["error"])
-
-
-def test_hybrid_router_byte_equals_kernel(spark, pages):
-    """The hybrid fast path must be byte-identical to the Arrow kernel
-    on every output column, with BOTH branches exercised: the pipeline
-    corpus routes fully relational; crafted documents (duplicate
-    first-degree hashes, escapes, astral chars, named graphs) must
-    route to the kernel and still match it exactly."""
-    from rdf_canonize_spark.operators.relational import sql_eligible_urls
-    from rdf_canonize_spark.pipeline.canon_stage import (
-        canonize_documents,
-        hybrid_canonize_documents,
-    )
-    from rdf_canonize_spark.pipeline.link import build_quads, gazetteer_df
-
-    quads = build_quads(pages, gazetteer_df(spark)).cache()
-    n_urls = quads.select("url").distinct().count()
-    assert sql_eligible_urls(quads).count() == n_urls  # all fast here
-    kern = {r["url"]: _canon_key(r)
-            for r in canonize_documents(quads, max_work_factor=3).collect()}
-    hyb = {r["url"]: _canon_key(r)
-           for r in hybrid_canonize_documents(
-               quads, max_work_factor=3).collect()}
-    assert hyb == kern
-
-    # crafted corpus: routing must peel off each ineligibility cause
-    schema = ("url string, s_kind int, s string, p string, o_kind int, "
-              "o string, o_datatype string, o_lang string, g_kind int, "
-              "g string")
-    P = "http://x.example/p"
-
-    def b(url, s, o):
-        return (url, 1, s, P, 1, o, None, None, 3, "")
-
-    def lit(url, s, o, dt=None, lang=None, g_kind=3, g=""):
-        return (url, 0, s, P, 2, o, dt, lang, g_kind, g)
-
-    rows = [
-        # twin disconnected bnodes with identical first-degree hashes
-        # -> n-degree hashing required -> kernel
-        b("u:twins", "b0", "b1"), b("u:twins", "b2", "b3"),
-        # quote in a literal -> escaping -> kernel
-        lit("u:quote", "http://x.example/s", 'say "hi"'),
-        # astral char -> UTF-16 sort order differs -> kernel
-        lit("u:astral", "http://x.example/s", "x" + chr(0x10400) + "y"),
-        # named graph -> kernel
-        lit("u:graph", "http://x.example/s", "v",
-            g_kind=0, g="http://x.example/g"),
-        # explicit xsd:string datatype (kernel normalizes it away)
-        lit("u:xsd", "http://x.example/s", "v",
-            dt="http://www.w3.org/2001/XMLSchema#string"),
-        # language tag WITHOUT rdf:langString datatype: the kernel
-        # normalizes null datatype to xsd:string and DROPS the tag,
-        # serialize_line would keep it -> kernel
-        lit("u:langnodt", "http://x.example/s", "v", lang="en"),
-        # eligible: two bnodes with distinct structure -> fast path
-        b("u:fast", "b0", "b1"),
-        lit("u:fast", "http://x.example/s", "v", lang="en",
-            dt="http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"),
-    ]
-    df = spark.createDataFrame(rows, schema)
-    fast_urls = {r["url"] for r in sql_eligible_urls(df).collect()}
-    assert fast_urls == {"u:fast"}
-    kern2 = {r["url"]: _canon_key(r)
-             for r in canonize_documents(
-                 df, max_work_factor=3, strategy="repartition").collect()}
-    hyb2 = {r["url"]: _canon_key(r)
-            for r in hybrid_canonize_documents(
-                df, max_work_factor=3, strategy="repartition").collect()}
-    assert hyb2 == kern2
-    # the twins doc genuinely exercised n-degree issuance
-    assert kern2["u:twins"][3] == 4  # n_bnodes
-    quads.unpersist()
 
 
 def test_input_hash_kernel_relational_parity_and_framing(spark, pages):
@@ -589,51 +511,6 @@ def test_canonize_colocated_from_bucketed_storage(spark, tmp_path,
         spark.sql("DROP TABLE IF EXISTS t_quads_b")
 
 
-def test_hybrid_cap_routes_oversized_to_quarantine(spark):
-    """A sql-ELIGIBLE document over max_doc_quads must not bypass the
-    mega-document quarantine through the fast path: the cap applies at
-    routing time, so hybrid_canonize_documents and canonize_documents
-    emit the SAME rows (canonical vs oversized-error) for the same
-    inputs and cap."""
-    from rdf_canonize_spark.operators.relational import sql_eligible_urls
-    from rdf_canonize_spark.pipeline.canon_stage import (
-        OVERSIZED_PREFIX,
-        canonize_documents,
-        hybrid_canonize_documents,
-    )
-
-    schema = ("url string, s_kind int, s string, p string, o_kind int, "
-              "o string, o_datatype string, o_lang string, g_kind int, "
-              "g string")
-    rows = []
-    # big doc: 40 plain IRI/literal quads, no bnodes -> sql-eligible
-    for i in range(40):
-        rows.append(("u:big", 0, f"http://x.example/s{i}",
-                     "http://x.example/p", 2, f"v{i}",
-                     None, None, 3, ""))
-    # small eligible doc
-    for i in range(3):
-        rows.append(("u:small", 0, f"http://x.example/s{i}",
-                     "http://x.example/p", 2, f"v{i}",
-                     None, None, 3, ""))
-    df = spark.createDataFrame(rows, schema)
-    # precondition: BOTH urls are fast-path eligible without the cap
-    assert {r["url"] for r in sql_eligible_urls(df).collect()} \
-        == {"u:big", "u:small"}
-    cap = 10
-    kern = {r["url"]: _canon_key(r)
-            for r in canonize_documents(
-                df, max_work_factor=3, strategy="repartition",
-                max_doc_quads=cap).collect()}
-    hyb = {r["url"]: _canon_key(r)
-           for r in hybrid_canonize_documents(
-               df, max_work_factor=3, strategy="repartition",
-               max_doc_quads=cap).collect()}
-    assert hyb == kern
-    assert hyb["u:big"][7].startswith(OVERSIZED_PREFIX)
-    assert hyb["u:small"][7] is None and hyb["u:small"][0]
-
-
 def test_pluggable_kernel_seam(spark):
     """kernel_fn swaps the per-document canonicalization kernel (the
     counterpart of the reference's native-implementation delegation
@@ -670,43 +547,19 @@ def test_pluggable_kernel_seam(spark):
         assert r["deep_iterations"] == 777
         assert r["nquads"] == base[url]["nquads"]
         assert r["quads_hash"] == base[url]["quads_hash"]
-    # the seam is Arrow-kernel-only: grouped strategy must refuse
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        canonize_documents(df, strategy="grouped",
-                           kernel_fn=tagging_kernel)
 
 
-def test_hybrid_non_default_digest_routes_all_to_kernel(spark):
-    """A non-sha256 digest (or a custom kernel_fn) must not produce a
-    mixed-algorithm union: the relational fast path is sha256-only, so
-    hybrid routes everything through the kernel and matches
-    canonize_documents exactly."""
-    from rdf_canonize_spark.pipeline.canon_stage import (
-        canonize_documents,
-        hybrid_canonize_documents,
+@pytest.mark.parametrize(
+    "strategy", ["grouped", "colocated_pandas", "hybrid", "auto"]
+)
+def test_unknown_strategy_raises(spark, strategy):
+    """Only 'colocated' and 'repartition' exist; anything else
+    refuses instead of silently picking a path."""
+    df = spark.createDataFrame(
+        [("u:1", 1, "b0", "http://x.example/p", 2, "v", None, None, 3, "")],
+        "url string, s_kind int, s string, p string, o_kind int, "
+        "o string, o_datatype string, o_lang string, g_kind int, "
+        "g string",
     )
-
-    schema = ("url string, s_kind int, s string, p string, o_kind int, "
-              "o string, o_datatype string, o_lang string, g_kind int, "
-              "g string")
-    rows = [
-        ("u:1", 1, "b0", "http://x.example/p", 2, "v", None, None, 3, ""),
-        ("u:2", 0, "http://x.example/s", "http://x.example/p", 2, "w",
-         None, None, 3, ""),
-    ]
-    df = spark.createDataFrame(rows, schema)
-    kern = {r["url"]: (r["nquads"], r["quads_hash"])
-            for r in canonize_documents(
-                df, strategy="repartition",
-                message_digest_algorithm="sha384").collect()}
-    hyb = hybrid_canonize_documents(
-        df, strategy="repartition",
-        message_digest_algorithm="sha384", with_routed=True,
-    ).collect()
-    assert {r["url"]: (r["nquads"], r["quads_hash"]) for r in hyb} == kern
-    assert all(r["routed"] == "kernel" for r in hyb)
-    # (canonical labels for these tiny docs coincide across digests --
-    # the digest's byte-effect on outputs is pinned by the
-    # digest-sha384/512 fixtures; here the contract under test is the
-    # all-kernel routing and exact kernel parity asserted above)
+    with pytest.raises(ValueError, match="unknown strategy"):
+        canonize_documents(df, strategy=strategy)

@@ -37,11 +37,6 @@ def main(argv=None):
     p.add_argument("--out", help="output dir (enables checkpointed write)")
     p.add_argument("--batch-id", type=int, default=0)
     p.add_argument("--max-work-factor", type=float, default=3)
-    p.add_argument("--strategy", default="colocated",
-                   choices=["colocated", "colocated_pandas",
-                            "repartition", "grouped", "hybrid", "auto"],
-                   help="canonize strategy; 'auto' applies the "
-                        "measured hybrid/kernel core-count crossover")
     p.add_argument("--master", default=None,
                    help="override master (default: spark-submit's)")
     p.add_argument("--partitions", type=int, default=None,
@@ -97,7 +92,6 @@ def main(argv=None):
             max_work_factor=args.max_work_factor,
             out_dir=args.out,
             batch_id=args.batch_id,
-            strategy=args.strategy,
         )
         stats = results["canonical"].agg(
             F.count(F.lit(1)).alias("docs"),
