@@ -13,10 +13,10 @@ the writer takes a ``fmt`` argument so the swap is one string):
 * ``metrics(partition_id, n_urls, n_quads, n_errors, deep_iterations)``
   -- per-partition rollup.
 
-Checkpoint/resume: each batch writes atomically into
-``<out>/canonical_nquads/batch=<id>/`` and appends the completed url
-range to ``<out>/_manifest`` parquet; ``resume_filter`` anti-joins
-pages against the manifest so a restarted job only processes the
+Checkpoint/resume: each batch commits atomically (one write job plus a
+rename) into ``<out>/canonical_nquads/batch=<id>/``; those committed
+directories are the completion record, and ``resume_filter`` anti-joins
+pages against their url column so a restarted job only processes the
 remainder.  (Batch-level resumability, not Structured Streaming -- the
 reference pipeline is strictly batch, SURVEY.md section 2.2.)
 """
@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from ..rdfc.terms import BLANK
@@ -120,51 +121,54 @@ def metrics_table(canonical_df):
 
 
 # --- checkpointed batch writes -------------------------------------------------
-def manifest_path(out_dir):
-    return os.path.join(out_dir, "_manifest")
-
-
-def resume_filter(spark, pages_df, out_dir):
-    """Drop pages already present in the completion manifest.  Also
-    sweeps legacy in-root staging leftovers first, so a dataset
-    resumed from the old layout reads clean (see
-    ``_clean_legacy_staging``)."""
-    _clean_legacy_staging(spark, out_dir)
-    mpath = manifest_path(out_dir)
-    try:
-        done = spark.read.parquet(mpath).select("url")
-    except Exception:
-        return pages_df  # no manifest yet -> full input
-    return pages_df.join(done, "url", "left_anti")
-
-
 def _fs_for(spark, path):
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
-def _clean_legacy_staging(spark, out_dir):
-    """One-time migration sweep: an earlier writer staged INSIDE the
-    data root as ``canonical_nquads/batch=<id>.staging``; the current
-    writer stages under ``<out>/_staging``, but a crash under the old
-    layout can have left ``*.staging`` dirs that whole-table reads
-    would pick up as bogus string-valued ``batch`` partitions
+def _committed_batches(spark, out_dir):
+    """Names of the committed ``batch=<id>`` directories under
+    ``<out>/canonical_nquads`` (driver-side listing, no Spark job).
+
+    Also the one-time migration sweep: an earlier writer staged INSIDE
+    the data root as ``canonical_nquads/batch=<id>.staging``; the
+    current writer stages under ``<out>/_staging``, but a crash under
+    the old layout can have left ``*.staging`` dirs that whole-table
+    reads would pick up as bogus string-valued ``batch`` partitions
     (duplicated rows + a flipped partition type).  Deleting them is
     always safe -- staging content is by definition uncommitted (the
     old commit was a rename away from the ``.staging`` name)."""
     data_root = os.path.join(out_dir, "canonical_nquads")
     fs, root_p = _fs_for(spark, data_root)
     if not fs.exists(root_p):
-        return
+        return []
+    names = []
     for st in fs.listStatus(root_p):
-        if st.getPath().getName().endswith(".staging"):
+        name = st.getPath().getName()
+        if name.endswith(".staging"):
             fs.delete(st.getPath(), True)
+        elif st.isDirectory() and name.startswith("batch="):
+            names.append(name)
+    return names
 
 
-def write_batch(canonical_df, out_dir, batch_id, fmt="parquet",
-                nonempty_hint=None):
-    """Stage-then-commit batch write + manifest append.
+def resume_filter(spark, pages_df, out_dir):
+    """Drop pages whose url is in a committed batch.  The committed
+    ``canonical_nquads/batch=<id>/`` directories are the completion
+    record (a commit is an atomic rename, and nothing is staged under
+    that root); an absent or batch-less root means nothing is done.
+    The explicit read schema spares a schema-inference job."""
+    if not _committed_batches(spark, out_dir):
+        return pages_df
+    data_root = os.path.join(out_dir, "canonical_nquads")
+    done = spark.read.schema("url string").parquet(data_root)
+    return pages_df.join(done, "url", "left_anti")
+
+
+def write_batch(canonical_df, out_dir, batch_id, fmt="parquet"):
+    """Stage-then-commit batch write in one Spark job; returns the
+    written ``{"docs", "quads", "errors"}`` counts.
 
     The batch is staged under ``<out>/_staging/batch=<id>`` first --
     OUTSIDE the partitioned data root, and under an underscore-prefixed
@@ -172,39 +176,41 @@ def write_batch(canonical_df, out_dir, batch_id, fmt="parquet",
     crash between staging and commit must not leave a directory that a
     whole-table read would pick up as a bogus ``batch='<id>.staging'``
     partition (duplicating rows and flipping the inferred partition
-    type to string).  Emptiness is
-    decided from the STAGED output (reading back parquet footers, not
-    re-running the pipeline), so the whole write costs exactly ONE
-    evaluation of the canonize plan -- no pre-probe scan.  An empty
-    result discards the staging directory, leaving any previously
-    completed ``batch=<id>`` data untouched (a fully-resumed batch has
-    an empty todo set; overwriting then would wipe completed data the
-    manifest still lists as done).  A non-empty result commits by
-    Hadoop-FileSystem rename over the old directory, then appends the
-    manifest; a crash between commit and manifest append re-processes
-    (idempotent overwrite), never skips.
-
-    ``nonempty_hint=False`` short-circuits the write entirely for
-    callers that already know the batch is empty.
+    type to string).  The counts come from an ``Observation`` on the
+    written frame, so emptiness is known when the write returns, with
+    no read-back.  An empty result discards the staging directory,
+    leaving any previously completed ``batch=<id>`` data untouched (a
+    fully-resumed batch has an empty todo set; overwriting then would
+    wipe completed data).  A non-empty result commits by
+    Hadoop-FileSystem rename over the old directory, which is then the
+    completion record ``resume_filter`` reads: reusing a batch id
+    replaces its urls, and the replaced ones become todo again.
 
     Format note: the stage/rename dance is for PATH-based formats
     (parquet/orc on a filesystem or rename-capable object store).  An
     Iceberg deployment gets atomic replacement from the table format's
     own snapshot commit -- swap this function's body for a plain
-    ``writeTo(table).overwritePartitions()`` guarded by the same
-    staged-emptiness read, keeping the manifest append unchanged.
+    ``writeTo(table).overwritePartitions()`` on the same observed
+    frame, skipped when the observed count is zero, and read the
+    table's url column in ``resume_filter``.
     """
     spark = canonical_df.sparkSession
-    data_path = os.path.join(out_dir, "canonical_nquads", f"batch={batch_id}")
-    if nonempty_hint is False:
-        return
-    _clean_legacy_staging(spark, out_dir)
+    _committed_batches(spark, out_dir)  # sweeps legacy in-root staging
+    obs = Observation()
+    observed = canonical_df.observe(
+        obs,
+        F.count(F.lit(1)).alias("docs"),
+        F.coalesce(F.sum("n_quads"), F.lit(0)).alias("quads"),
+        F.count(F.col("error")).alias("errors"),
+    )
     staging = os.path.join(out_dir, "_staging", f"batch={batch_id}")
-    canonical_df.write.mode("overwrite").format(fmt).save(staging)
+    observed.write.mode("overwrite").format(fmt).save(staging)
+    written = obs.get
     fs, staging_p = _fs_for(spark, staging)
-    if spark.read.format(fmt).load(staging).limit(1).count() == 0:
+    if written["docs"] == 0:
         fs.delete(staging_p, True)
-        return
+        return written
+    data_path = os.path.join(out_dir, "canonical_nquads", f"batch={batch_id}")
     _, data_p = _fs_for(spark, data_path)
     fs.delete(data_p, True)
     # rename needs the destination parent to exist (first batch creates
@@ -212,7 +218,4 @@ def write_batch(canonical_df, out_dir, batch_id, fmt="parquet",
     fs.mkdirs(data_p.getParent())
     if not fs.rename(staging_p, data_p):
         raise IOError(f"commit rename failed: {staging} -> {data_path}")
-    done_urls = spark.read.format(fmt).load(data_path).select("url")
-    done_urls.withColumn("batch_id", F.lit(batch_id)).write.mode(
-        "append"
-    ).format(fmt).save(manifest_path(out_dir))
+    return written

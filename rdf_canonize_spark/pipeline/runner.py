@@ -35,9 +35,10 @@ def run_pipeline(
     """Run the full pipeline; returns a dict of result DataFrames.
 
     With ``out_dir`` set, performs the checkpointed write (resuming past
-    completed urls from the manifest).  ``build_quads`` output is
-    url-colocated, so canonicalization is the zero-shuffle 'colocated'
-    path.
+    the urls of the committed batches) and adds ``results["written"]``,
+    the ``{"docs", "quads", "errors"}`` counts observed during that
+    write.  ``build_quads`` output is url-colocated, so
+    canonicalization is the zero-shuffle 'colocated' path.
     """
     gaz = gazetteer_df(spark)
     if out_dir:
@@ -54,7 +55,7 @@ def run_pipeline(
     results["nodes"] = node_table(results["edges"])
     if out_dir:
         # Emptiness (fully-resumed batch / all-null-text pages) is
-        # decided INSIDE write_batch from the staged output -- the
-        # pipeline evaluates exactly once, with no pre-probe scan.
-        write_batch(canonical, out_dir, batch_id)
+        # decided INSIDE write_batch from counts observed during the
+        # write -- the pipeline evaluates exactly once, in one job.
+        results["written"] = write_batch(canonical, out_dir, batch_id)
     return results

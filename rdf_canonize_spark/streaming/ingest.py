@@ -1,8 +1,8 @@
 """Structured Streaming ingest for continuously-arriving pages.
 
 The reference is strictly batch (SURVEY.md section 2.2) and the north
-rule's resumability is manifest-based, but a crawl is naturally a
-stream: this module runs the SAME pipeline incrementally --
+rule's resumability reads the committed batch directories, but a crawl
+is naturally a stream: this module runs the SAME pipeline incrementally --
 ``readStream`` over a pages directory, the per-batch transformation is
 ``run_pipeline``'s stages applied inside ``foreachBatch``, and Spark's
 streaming checkpoint gives exactly-once per-batch file output.

@@ -234,6 +234,69 @@ def test_checkpoint_resume(spark, tmp_path):
     assert dict(done.dtypes)["batch"] == "int"
 
 
+def _urls(df):
+    return {r["url"] for r in df.select("url").collect()}
+
+
+def test_reused_batch_id_loses_no_document(spark, tmp_path):
+    """Re-committing batch id 0 replaces its urls; the replaced ones
+    must come back as todo, not count as done."""
+    from rdf_canonize_spark.pipeline.materialize import resume_filter
+
+    out = str(tmp_path / "reuse")
+    pages = synthesize_pages(spark, 30).cache()
+    run_pipeline(spark, pages.limit(18), out_dir=out, batch_id=0)
+    run_pipeline(spark, pages, out_dir=out, batch_id=0)
+    committed = _urls(spark.read.parquet(f"{out}/canonical_nquads"))
+    todo = _urls(resume_filter(spark, pages, out))
+    assert committed | todo == _urls(pages)
+    assert not committed & todo
+
+
+def test_deploy_adds_no_spark_job(spark, pages, tmp_path):
+    """A fresh-dir deploy launches exactly the jobs of writing the same
+    canonize plan to the ``noop`` sink: the checkpointed commit adds no
+    read-back, manifest or resume-probe job."""
+    from rdf_canonize_spark.pipeline.link import build_quads, gazetteer_df
+
+    sc = spark.sparkContext
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    pages.count()  # both legs read the materialized cache
+    deploy = jobs(
+        "deploy-jobs",
+        lambda: run_pipeline(spark, pages, out_dir=str(tmp_path / "out")),
+    )
+    noop = jobs(
+        "noop-jobs",
+        lambda: canonize_documents(build_quads(pages, gazetteer_df(spark)))
+        .write.format("noop").mode("overwrite").save(),
+    )
+    assert deploy == noop
+
+
+def test_written_counts_match_committed_output(spark, tmp_path):
+    out = str(tmp_path / "written")
+    pages = synthesize_pages(spark, 30).cache()
+    written = run_pipeline(spark, pages, out_dir=out)["written"]
+    got = spark.read.parquet(f"{out}/canonical_nquads").agg(
+        F.count(F.lit(1)).alias("docs"),
+        F.sum("n_quads").alias("quads"),
+        F.count("error").alias("errors"),
+    ).collect()[0].asDict()
+    assert written == got
+    assert written["docs"] == 30
+    rerun = run_pipeline(spark, pages, out_dir=out)["written"]
+    assert rerun == {"docs": 0, "quads": 0, "errors": 0}
+
+
 def test_pages_from_documents(spark, sf_dir):
     pages = pages_from_documents(spark, sf_dir)
     row = pages.first()
