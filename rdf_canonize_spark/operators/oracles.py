@@ -10,20 +10,16 @@ independent end-to-end check of extract + link + assemble.
 from __future__ import annotations
 
 from ..pipeline.gazetteer import (
-    KNOWN_SURFACES,
     PRED_NS,
     RELATIONS,
     SURFACES,
-    entity_iri,
+    sql_values_gazetteer,
 )
 
 _LANGSTRING = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
 
 _SURF_LIST = "[" + ", ".join("'%s'" % s for s in SURFACES) + "]"
 _REL_LIST = "[" + ", ".join("'%s'" % r for r in RELATIONS) + "]"
-_GAZ_VALUES = ", ".join(
-    "('%s', '%s')" % (s, entity_iri(s)) for s in KNOWN_SURFACES
-)
 
 # Quads CTE: mirrors pages_from_documents -> extract -> link -> assemble
 QUADS_CTE = f"""
@@ -41,7 +37,7 @@ QUADS_CTE = f"""
         AS o_surface
     FROM stmt
   ),
-  gaz(surface, iri) AS (VALUES {_GAZ_VALUES}),
+  gaz(surface, iri) AS (VALUES {sql_values_gazetteer()}),
   stmt_quads AS (
     SELECT
       m.url,

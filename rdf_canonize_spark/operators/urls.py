@@ -184,12 +184,14 @@ def blocklist_filter(df, blocked_hosts=BLOCKED_HOSTS,
         "^www\\.",
         "",
     )
-    suffix_hit = None
+    suffix_hit = F.lit(False)
     for sfx in blocked_suffixes:
-        hit = F.col("host").endswith(sfx)
-        suffix_hit = hit if suffix_hit is None else (suffix_hit | hit)
+        suffix_hit = suffix_hit | F.col("host").endswith(sfx)
+    host_hit = (
+        F.col("host").isin(*blocked_hosts) if blocked_hosts else F.lit(False)
+    )
     reason = (
-        F.when(F.col("host").isin(*blocked_hosts), F.lit("host"))
+        F.when(host_hit, F.lit("host"))
         .when(suffix_hit, F.lit("suffix"))
     )
     return (

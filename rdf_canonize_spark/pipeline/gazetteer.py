@@ -49,13 +49,10 @@ def predicate_iri(relation):
     return PRED_NS + relation
 
 
-def gazetteer_rows():
-    """(surface, iri) for known entities — the broadcast link dictionary."""
-    return [(s, entity_iri(s)) for s in KNOWN_SURFACES]
-
-
 def sql_values_gazetteer():
-    """The gazetteer as a SQL VALUES list (for DuckDB oracle CTEs)."""
+    """(surface, iri) for known entities as a SQL VALUES list: the
+    broadcast link dictionary (``link.gazetteer_df``) and the DuckDB
+    oracle's ``gaz`` CTE."""
     return ", ".join(
         "('%s', '%s')" % (s, entity_iri(s)) for s in KNOWN_SURFACES
     )

@@ -26,12 +26,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from ..rdfc.terms import BLANK, DEFAULT_GRAPH, LITERAL, NAMED
-from .gazetteer import PRED_NS, gazetteer_rows, predicate_iri, RELATIONS
+from .gazetteer import PRED_NS, RELATIONS, predicate_iri, sql_values_gazetteer
 
 
 def gazetteer_df(spark):
-    return spark.createDataFrame(
-        gazetteer_rows(), "surface string, iri string"
+    """The built-in dictionary as an inline ``VALUES`` table: it plans as
+    ``LocalTableScan``, so its broadcast runs no Python (a
+    ``createDataFrame`` list is ``Scan ExistingRDD``, Python on every
+    evaluation).  A production dictionary is a table read."""
+    return spark.sql(
+        f"SELECT * FROM VALUES {sql_values_gazetteer()} AS t(surface, iri)"
     )
 
 

@@ -1,27 +1,23 @@
 """End-to-end KG-construction pipeline driver.
 
 pages -> [extract: Catalyst regexp] -> mentions
-      -> [link: broadcast gazetteer join] -> quads
+      -> [link: broadcast join against a LocalTableScan gazetteer] -> quads
       -> [canonize: sortWithinPartitions(url).mapInArrow(RDFC-1.0)]
       -> canonical
-      -> [materialize: edges/nodes/lineage/metrics (+ checkpointed writes)]
+      -> [materialize: checkpointed write of canonical_nquads]
 
 Control crosses the JVM<->Python boundary exactly once (the canonize
-Arrow kernel); everything else is whole-stage-codegen relational.
+Arrow kernel; asserted on the executed plan in
+tests/test_plans_and_streaming.py); everything else is
+whole-stage-codegen relational.  Edges/nodes/lineage/metrics are built
+on request with the ``materialize`` functions, not per deploy.
 """
 
 from __future__ import annotations
 
 from .canon_stage import canonize_documents
 from .link import build_quads, gazetteer_df
-from .materialize import (
-    lineage_table,
-    metrics_table,
-    node_table,
-    relabel_edges,
-    resume_filter,
-    write_batch,
-)
+from .materialize import resume_filter, write_batch
 
 
 def run_pipeline(
@@ -32,7 +28,8 @@ def run_pipeline(
     batch_id=0,
     extract_fn=None,
 ):
-    """Run the full pipeline; returns a dict of result DataFrames.
+    """Run the full pipeline; returns ``{"quads", "canonical"}``, the
+    lazy quad-table and canonical-output DataFrames.
 
     With ``out_dir`` set, performs the checkpointed write (resuming past
     the urls of the committed batches) and adds ``results["written"]``,
@@ -45,14 +42,7 @@ def run_pipeline(
         pages_df = resume_filter(spark, pages_df, out_dir)
     quads = build_quads(pages_df, gaz, extract_fn=extract_fn)
     canonical = canonize_documents(quads, max_work_factor=max_work_factor)
-    results = {
-        "quads": quads,
-        "canonical": canonical,
-        "edges": relabel_edges(canonical, quads),
-        "lineage": lineage_table(canonical, pages_df),
-        "metrics": metrics_table(canonical),
-    }
-    results["nodes"] = node_table(results["edges"])
+    results = {"quads": quads, "canonical": canonical}
     if out_dir:
         # Emptiness (fully-resumed batch / all-null-text pages) is
         # decided INSIDE write_batch from counts observed during the

@@ -680,6 +680,28 @@ def test_length_histogram_and_blocklist_planted(spark):
     assert got_b[4] == ("site13.example.com.evil.org", None, False)
 
 
+def test_blocklist_filter_empty_lists(spark):
+    """Empty blocklists are a valid config: nothing is blocked."""
+    from rdf_canonize_spark.operators.urls import blocklist_filter
+
+    urls_df = spark.createDataFrame(
+        [(1, "https://www.bad.example.net/x"),
+         (2, "http://site3.example.com/")],
+        "doc_id long, url string",
+    )
+    cases = [((), ()), ((), (".net",)), (("site3.example.com",), ())]
+    for hosts, suffixes in cases:
+        got = {
+            r["doc_id"]: (r["block_reason"], r["blocked"])
+            for r in blocklist_filter(urls_df, hosts, suffixes).collect()
+        }
+        want = {
+            1: ("suffix", True) if suffixes else (None, False),
+            2: ("host", True) if hosts else (None, False),
+        }
+        assert got == want, (hosts, suffixes)
+
+
 def test_entity_cooccurrence_planted(spark):
     """Co-occurrence PMI: pair counts over distinct per-doc mentions,
     the entity cap excludes mega-list documents BEFORE pairing (and

@@ -20,6 +20,12 @@ from rdf_canonize_spark.pipeline.extract import (
     extract_mentions,
     extract_mentions_arrow,
 )
+from rdf_canonize_spark.pipeline.materialize import (
+    lineage_table,
+    metrics_table,
+    node_table,
+    relabel_edges,
+)
 from rdf_canonize_spark.pipeline.pages import (
     pages_from_documents,
     synthesize_pages,
@@ -176,10 +182,10 @@ def test_blank_nodes_present_and_canonical(results):
         assert "_:c14n" in r["nquads"]
 
 
-def test_lineage_and_metrics(results):
-    lineage = results["lineage"]
+def test_lineage_and_metrics(results, pages):
+    lineage = lineage_table(results["canonical"], pages)
     assert lineage.filter("text_sha256 is null").count() == 0
-    m = results["metrics"].agg(
+    m = metrics_table(results["canonical"]).agg(
         F.sum("n_urls"), F.sum("n_errors")
     ).collect()[0]
     assert m[0] == N_PAGES
@@ -188,7 +194,7 @@ def test_lineage_and_metrics(results):
 
 def test_nodes_skolemized(results):
     """Blank nodes must not merge across documents."""
-    nodes = results["nodes"]
+    nodes = node_table(relabel_edges(results["canonical"], results["quads"]))
     bn = nodes.filter("term_kind = 1")
     assert bn.filter(~F.col("term").contains("#_:")).count() == 0
 
@@ -295,6 +301,16 @@ def test_written_counts_match_committed_output(spark, tmp_path):
     assert written["docs"] == 30
     rerun = run_pipeline(spark, pages, out_dir=out)["written"]
     assert rerun == {"docs": 0, "quads": 0, "errors": 0}
+
+
+def test_run_pipeline_returns_only_written_frames(spark, results, tmp_path):
+    """The deploy builds only the frames it writes: no edge, node,
+    lineage or metrics frame is analysed on every run."""
+    assert set(results) == {"quads", "canonical"}
+    deployed = run_pipeline(
+        spark, synthesize_pages(spark, 5), out_dir=str(tmp_path / "out")
+    )
+    assert set(deployed) == {"quads", "canonical", "written"}
 
 
 def test_pages_from_documents(spark, sf_dir):

@@ -1,5 +1,7 @@
 """Plan-shape assertions (the 100 TB contract) + streaming ingest."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,6 +21,33 @@ def test_colocated_canonize_has_zero_shuffles(spark):
         quads, max_work_factor=3, strategy="repartition"
     )
     assert checks.count_shuffles(repart) == 1
+
+
+def test_deploy_runs_python_only_in_the_kernel(spark):
+    """The runner's one-boundary claim: the deploy's canonize plan has
+    exactly one Python stage (the ``MapInArrow`` kernel) and no
+    ``ExistingRDD`` scan, whose every evaluation -- broadcasts included
+    -- would run Python workers.  The gazetteer is a JVM local
+    relation holding exactly the known-entity dictionary."""
+    from rdf_canonize_spark.pipeline.gazetteer import (
+        KNOWN_SURFACES,
+        entity_iri,
+    )
+    from rdf_canonize_spark.pipeline.runner import run_pipeline
+
+    canon = run_pipeline(spark, synthesize_pages(spark, 50))["canonical"]
+    canon.write.format("noop").mode("overwrite").save()
+    plan = checks.executed_plan(canon)
+    assert "ExistingRDD" not in plan, plan
+    assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, plan
+
+    gaz = gazetteer_df(spark)
+    gaz_plan = checks.executed_plan(gaz)
+    assert "LocalTableScan" in gaz_plan
+    assert "ExistingRDD" not in gaz_plan
+    rows = [tuple(r) for r in gaz.collect()]
+    assert len(rows) == 150
+    assert sorted(rows) == sorted((s, entity_iri(s)) for s in KNOWN_SURFACES)
 
 
 def test_filter_pushdown_reaches_parquet_scan(spark, sf_dir):
