@@ -4,11 +4,14 @@
 (extract -> link -> per-document RDFC-1.0 canonicalization) over
 synthetic Common-Crawl-style pages derived from sf0.001 documents.
 
-``queries()`` / ``oracle_sql()`` -- one entry per implemented operator
-from SURVEY.md section 2; DuckDB oracles verify every SQL-expressible
-stage.  The canonicalization stage itself (O4-O10 with n-degree
-recursion) is non-SQL-expressible -- it gets a rows-only check here and
-is byte-verified against reference-generated goldens in tests/.
+``queries()`` / ``oracle_sql()`` -- 41 queries, each with a DuckDB
+oracle: the KG stages (triple extraction, the relational O-stages,
+canonicalization, entity linking / co-occurrence / components /
+PageRank), the canonical-URL function streaming ingest dedups on, and
+engine-category TPC-H / events / text queries.  The canonicalization
+stage itself (O4-O10 with n-degree recursion) is non-SQL-expressible --
+its oracle is partial (counts + input hash) and the bytes are verified
+against reference-generated goldens in tests/.
 """
 
 from __future__ import annotations
@@ -19,15 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rdf_canonize_spark.functions import vectors
-from rdf_canonize_spark.operators import (
-    dedup,
-    oracle_ops,
-    oracles,
-    relational,
-    similarity,
-    temporal,
-    textstats,
-)
+from rdf_canonize_spark.operators import oracles, relational, temporal
 from rdf_canonize_spark.pipeline.canon_stage import canonize_documents
 from rdf_canonize_spark.pipeline.link import build_quads, gazetteer_df
 from rdf_canonize_spark.pipeline.pages import pages_from_documents
@@ -450,9 +445,32 @@ def q_text_word_udtf(spark, sf_dir):
 
 def q_docs_geo_mean(spark, sf_dir):
     """Grouped-agg pandas UDF surface (Arrow-batched UDAF): geometric
-    mean of document length per language."""
+    mean of document length per language.  The UDFs are built here
+    (pandas_udf type parsing needs an active session); pandas/numpy
+    are imported at call scope but annotated with real types so hint
+    inference works."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    def _geo_mean(v: pd.Series) -> float:
+        return float(np.exp(np.log(v.astype("float64")).mean()))
+
+    def _n(v: pd.Series) -> int:
+        return int(len(v))
+
+    _geo_mean.__annotations__ = {"v": pd.Series, "return": float}
+    _n.__annotations__ = {"v": pd.Series, "return": int}
+    geo_mean = pandas_udf(_geo_mean, "double")
+    n_rows = pandas_udf(_n, "long")
+
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return textstats.geo_mean_by_lang(docs)
+    # a grouped-agg pandas UDF cannot mix with JVM aggregates in one
+    # agg() -- both outputs go through the pandas aggregation path
+    return docs.groupBy("lang").agg(
+        F.round(geo_mean("n_chars"), 6).alias("geo_chars"),
+        n_rows("n_chars").alias("n_docs"),
+    )
 
 
 def q_local_supplier_volume(spark, sf_dir):
@@ -602,118 +620,6 @@ def q_entity_sharded_link(spark, sf_dir):
     )
 
 
-# --- training-data operators -----------------------------------------------------
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def q_dedup_exact(spark, sf_dir):
-    return dedup.exact_dedup(dedup.near_dup_corpus(spark, sf_dir))
-
-
-def q_paragraph_dedup(spark, sf_dir):
-    """Sub-document exact dedup: window-aligned 12-word segments
-    repeated across distinct documents, with spread + keeper."""
-    return dedup.paragraph_dedup(dedup.near_dup_corpus(spark, sf_dir))
-
-
-def q_dsir_weights(spark, sf_dir):
-    """DSIR importance weights (hashed bag-of-tokens log-likelihood
-    ratio vs the lang='en' target), integerized to micro-nats per
-    bucket before the per-doc sum (operators/sampling.py)."""
-    from rdf_canonize_spark.operators import sampling
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "lang", "text"
-    )
-    return sampling.dsir_weights(docs)
-
-
-def q_unigram_ppl(spark, sf_dir):
-    """CCNet-style unigram-LM perplexity: add-one-smoothed unigram
-    distribution fit on the lang='en' reference subset, every doc
-    scored by integer micro-nat mean NLL + whole-nat ppl_band
-    (operators/sampling.py unigram_ppl)."""
-    from rdf_canonize_spark.operators import sampling
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "lang", "text"
-    )
-    return sampling.unigram_ppl(docs, ref_predicate="lang = 'en'")
-
-
-def q_bigram_ppl(spark, sf_dir):
-    """Order-aware bigram-LM perplexity vs the lang='en' reference
-    subset (sampling.bigram_ppl; integer micro-nat exact)."""
-    from rdf_canonize_spark.operators import sampling
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "lang", "text"
-    )
-    return sampling.bigram_ppl(docs, ref_predicate="lang = 'en'")
-
-
-def q_line_filter(spark, sf_dir):
-    """C4-style line-level cleaning: first-failing rule per line,
-    rebuilt clean text, kept-line + lorem-ipsum document gate
-    (textstats.line_filter)."""
-    from rdf_canonize_spark.operators.textstats import line_filter
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    return line_filter(docs)
-
-
-def q_robots_rules(spark, sf_dir):
-    """robots.txt parsing: comment strip, case-insensitive keys,
-    carry-forward group assignment (operators/robots.py)."""
-    from rdf_canonize_spark.operators import robots
-
-    return robots.parse_robots(robots.robots_corpus(spark, sf_dir))
-
-
-def q_robots_gate(spark, sf_dir):
-    """robots.txt compliance gate over the crawl corpus:
-    longest-prefix match, allow wins ties, no match = allowed
-    (operators/robots.py)."""
-    from rdf_canonize_spark.operators import robots, urls
-
-    rules = robots.parse_robots(robots.robots_corpus(spark, sf_dir))
-    return robots.robots_gate(urls.crawl_urls(spark, sf_dir), rules)
-
-
-def q_quality_threshold(spark, sf_dir):
-    """Per-language quality cutoff calibration: histogram-level
-    cumulative threshold, never a per-lang corpus sort
-    (textstats.quality_threshold)."""
-    from rdf_canonize_spark.operators.textstats import quality_threshold
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "lang", "text"
-    )
-    return quality_threshold(docs)
-
-
-def q_length_histogram(spark, sf_dir):
-    """Token-length power-of-2 histogram per language
-    (textstats.length_histogram)."""
-    from rdf_canonize_spark.operators.textstats import length_histogram
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "lang", "text"
-    )
-    return length_histogram(docs)
-
-
-def q_url_blocklist(spark, sf_dir):
-    """Domain blocklist gate over the synthetic crawl corpus: exact
-    host + registered-suffix rules (urls.blocklist_filter)."""
-    from rdf_canonize_spark.operators import urls
-
-    return urls.blocklist_filter(urls.crawl_urls(spark, sf_dir))
-
-
 def q_entity_cooccurrence(spark, sf_dir):
     """Entity co-occurrence PMI graph: capped within-document pair
     join, micro-nat PMI over document frequencies
@@ -721,214 +627,6 @@ def q_entity_cooccurrence(spark, sf_dir):
     from rdf_canonize_spark.pipeline.entities import entity_cooccurrence
 
     return entity_cooccurrence(_quads(spark, sf_dir))
-
-
-def q_temperature_sample(spark, sf_dir):
-    """Temperature-based source mixing: alpha=0.5 source
-    re-balancing under a 50% document budget, integer-exact keep
-    probabilities, hash-threshold selection
-    (sampling.temperature_sample)."""
-    from rdf_canonize_spark.operators.sampling import temperature_sample
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "source"
-    )
-    return temperature_sample(docs)
-
-
-def q_incremental_dedup(spark, sf_dir):
-    """Snapshot-over-snapshot dedup: the derived crawl variants
-    screened against the original corpus -- exact hash, then LSH-band
-    candidates verified by exact Jaccard, old x new quadrant only
-    (dedup.incremental_dedup)."""
-    from pyspark.sql import functions as F
-
-    from rdf_canonize_spark.operators.dedup import (
-        incremental_dedup,
-        near_dup_corpus,
-    )
-
-    corpus = near_dup_corpus(spark, sf_dir)
-    old = corpus.filter(F.col("doc_id") < 1000000)
-    new = corpus.filter(F.col("doc_id") >= 1000000)
-    return incremental_dedup(new, old)
-
-
-def q_media_ahash(spark, sf_dir):
-    """Perceptual image hashing through the Arrow kernel: real aHash
-    for decodable rasters, deterministic sha256-prefix fallback for
-    the html corpus (multimodal.image_ahash)."""
-    from rdf_canonize_spark.operators import multimodal
-
-    pages = pages_from_documents(spark, sf_dir)
-    return multimodal.image_ahash(multimodal.attach_media(pages))
-
-
-def q_media_ahash_near_dups(spark, sf_dir):
-    """Banded-Hamming near-duplicate image pairs
-    (multimodal.ahash_near_dups) over a synthetic hash table derived
-    from the corpus: every doc's md5-prefix code, an exact twin for
-    doc_id %% 7, and a 1-bit-flipped twin for doc_id %% 5 (the
-    hex-digit low-bit flip is the translate trick, SQL-reproducible)
-    -- so the exact pigeonhole guarantee is exercised at Hamming 0
-    and 1 against random 64-bit non-pairs."""
-    from pyspark.sql import functions as F
-
-    from rdf_canonize_spark.operators.multimodal import ahash_near_dups
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    h = F.md5("text")
-    flip = F.concat(
-        F.substring(h, 1, 4),
-        F.translate(
-            F.substring(h, 5, 1),
-            "0123456789abcdef",
-            "1032547698badcfe",
-        ),
-        F.substring(h, 6, 11),
-    )
-    base = docs.select(
-        F.concat(F.lit("doc:"), F.col("doc_id").cast("string")).alias(
-            "url"
-        ),
-        F.substring(h, 1, 16).alias("ahash"),
-    )
-    near = docs.filter(F.col("doc_id") % 5 == 0).select(
-        F.concat(F.lit("near:"), F.col("doc_id").cast("string")).alias(
-            "url"
-        ),
-        flip.alias("ahash"),
-    )
-    copy = docs.filter(F.col("doc_id") % 7 == 0).select(
-        F.concat(F.lit("copy:"), F.col("doc_id").cast("string")).alias(
-            "url"
-        ),
-        F.substring(h, 1, 16).alias("ahash"),
-    )
-    return ahash_near_dups(base.unionByName(near).unionByName(copy))
-
-
-def q_bpe_merges(spark, sf_dir):
-    """BPE tokenizer training: the top-6 learned symbol-pair merges
-    with deterministic ties (textstats.bpe_merges)."""
-    from rdf_canonize_spark.operators.textstats import bpe_merges
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    return bpe_merges(docs)
-
-
-def q_inverted_index(spark, sf_dir):
-    """Inverted-index construction: per-token df / total count and a
-    rank-capped ascending posting list (textstats.inverted_index)."""
-    from rdf_canonize_spark.operators.textstats import inverted_index
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    return inverted_index(docs)
-
-
-def q_source_profile(spark, sf_dir):
-    """Per-source curation profile: doc count, exact-dup rate, token
-    volume, majority language + purity, mean length
-    (textstats.source_profile)."""
-    from rdf_canonize_spark.operators.textstats import source_profile
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "source", "lang", "text"
-    )
-    return source_profile(docs)
-
-
-def q_containment_pairs(spark, sf_dir):
-    """Asymmetric containment dedup over the planted near-dup corpus:
-    rare-shingle candidates, full-set intersection, directional
-    inner/outer containment (dedup.containment_pairs)."""
-    return dedup.containment_pairs(dedup.near_dup_corpus(spark, sf_dir))
-
-
-def q_nfc_profile(spark, sf_dir):
-    """Unicode NFC-normalization profile: changed flag, normalized
-    code-point length, md5 dedup key (textstats.nfc_profile,
-    Arrow-batched kernel; zero shuffles)."""
-    from rdf_canonize_spark.operators.textstats import nfc_profile
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    return nfc_profile(docs)
-
-
-def q_kmeans_quantized(spark, sf_dir):
-    """Bit-portable Lloyd k-means over integer-quantized embeddings:
-    2 assign/update rounds + final per-cell stats, exact integer
-    means and inertia (similarity.kmeans_quantized)."""
-    from rdf_canonize_spark.operators import similarity
-
-    return similarity.kmeans_quantized(similarity._load(spark, sf_dir))
-
-
-def q_tfidf_keywords(spark, sf_dir):
-    """TF-IDF keyword extraction: per-doc top-5 alphabetic
-    non-stopword tokens by tf x integer micro-nat smoothed idf
-    (textstats.tfidf_keywords)."""
-    from rdf_canonize_spark.operators.textstats import tfidf_keywords
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    return tfidf_keywords(docs)
-
-
-def q_build_vocab(spark, sf_dir):
-    """Tokenizer-vocabulary construction: top-k corpus tokens with
-    deterministic ties and contiguous ids (textstats.build_vocab)."""
-    from rdf_canonize_spark.operators.textstats import build_vocab
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    return build_vocab(docs)
-
-
-def q_oov_stats(spark, sf_dir):
-    """Per-doc OOV rate against the built vocab (broadcast join)."""
-    from rdf_canonize_spark.operators.textstats import (
-        build_vocab,
-        oov_stats,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    return oov_stats(docs, build_vocab(docs))
-
-
-def q_quality_gate(spark, sf_dir):
-    """The composed C4/Gopher-style filter ladder: one keep/drop
-    verdict + first-failing-rule reason per document
-    (operators/gate.py)."""
-    from rdf_canonize_spark.operators import gate
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "lang", "text"
-    )
-    return gate.quality_gate(docs)
-
-
-def q_gate_histogram(spark, sf_dir):
-    """Reject-reason histogram over the gate output -- the pipeline
-    tuning artifact."""
-    from rdf_canonize_spark.operators import gate
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "lang", "text"
-    )
-    return gate.gate_histogram(gate.quality_gate(docs))
 
 
 def q_url_canonicalize(spark, sf_dir):
@@ -950,288 +648,16 @@ def q_url_dedup(spark, sf_dir):
     return urls.url_dedup(urls.crawl_urls(spark, sf_dir))
 
 
-def q_duplicate_spans(spark, sf_dir):
-    """Exact-substring duplicate spans (Lee et al. 2022 family):
-    offset-free merged runs of cross-document 13-grams -- the
-    suffix-array dedup use case as rolling-gram explode + md5 groupBy
-    + gaps-and-islands merge."""
-    return dedup.duplicate_spans(dedup.near_dup_corpus(spark, sf_dir))
-
-
-def q_duplicate_span_stats(spark, sf_dir):
-    """Per-doc duplicated-text profile (coverage fraction, span
-    count, longest span) -- the doc-level filter signal over the
-    exact-substring span table."""
-    return dedup.duplicate_span_stats(
-        dedup.near_dup_corpus(spark, sf_dir)
-    )
-
-
-def q_remove_duplicate_spans(spark, sf_dir):
-    """Span-level cleaning: drop every token covered by a
-    cross-document duplicate span, rebuild whitespace-normalized
-    text (drop-all-occurrences policy)."""
-    return dedup.remove_duplicate_spans(
-        dedup.near_dup_corpus(spark, sf_dir)
-    )
-
-
-def _boiler_corpus(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "source", "text"
-    )
-    reposts = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 2000000).alias("doc_id"), "source", "text"
-    )
-    return docs.unionAll(reposts)
-
-
-def q_boilerplate_segments(spark, sf_dir):
-    """CCNet-style per-source boilerplate list over documents plus an
-    every-10th exact repost (same source) -- the removal list a
-    cleaning pass anti-joins against."""
-    return dedup.boilerplate_segments(_boiler_corpus(spark, sf_dir))
-
-
-def q_remove_boilerplate(spark, sf_dir):
-    """The consuming cleaning pass: drop flagged segments, rebuild
-    whitespace-normalized text, count removals per document."""
-    corpus = _boiler_corpus(spark, sf_dir)
-    removal = dedup.boilerplate_segments(corpus)
-    return dedup.remove_boilerplate(corpus, removal)
-
-
-def q_dedup_jaccard(spark, sf_dir):
-    return dedup.jaccard_pairs(
-        dedup.near_dup_corpus(spark, sf_dir), threshold=0.5
-    )
-
-
-def q_dedup_minhash_signatures(spark, sf_dir):
-    return dedup.minhash_signatures(dedup.near_dup_corpus(spark, sf_dir))
-
-
-def q_dedup_lsh_candidates(spark, sf_dir):
-    return dedup.lsh_candidates(dedup.near_dup_corpus(spark, sf_dir))
-
-
-def q_dedup_simhash(spark, sf_dir):
-    return dedup.simhash(dedup.near_dup_corpus(spark, sf_dir))
-
-
-def q_dedup_clusters(spark, sf_dir):
-    """End-to-end near-dup clustering: LSH -> verify -> connected
-    components -> per-cluster keeper (DuckDB recursive-CTE oracle)."""
-    return dedup.dedup_clusters(
-        dedup.near_dup_corpus(spark, sf_dir), threshold=0.5
-    )
-
-
-def q_dedup_lsh_verified(spark, sf_dir):
-    """Composed near-dup scale path: MinHash -> LSH band candidates ->
-    exact Jaccard verification restricted to survivors (never a
-    corpus-wide shingle self-join)."""
-    return dedup.lsh_verified_pairs(
-        dedup.near_dup_corpus(spark, sf_dir), threshold=0.5
-    )
-
-
-def q_text_lang_id(spark, sf_dir):
-    return textstats.lang_id(_docs(spark, sf_dir))
-
-
-def q_text_quality(spark, sf_dir):
-    return textstats.quality_score(_docs(spark, sf_dir))
-
-
-def q_text_token_counts(spark, sf_dir):
-    return textstats.token_counts(_docs(spark, sf_dir))
-
-
-def q_text_fingerprint(spark, sf_dir):
-    return textstats.fingerprint(_docs(spark, sf_dir))
-
-
-def q_text_repetition(spark, sf_dir):
-    """Gopher repetition rules: duplicate-word / top-bigram /
-    duplicate-trigram fractions + the combined filter flag (the
-    standard boilerplate-loop and keyword-stuffing catch that length
-    checks miss).  One tagged n-gram explode, two narrow shuffles."""
-    return textstats.repetition_stats(_docs(spark, sf_dir))
-
-
-SAMPLE_RATES = {"en": 0.5, "de": 0.25, "fr": 0.1}
-MIX_QUOTAS = {"en": 40, "de": 25, "fr": 10, "es": 5}
-
-
-def q_docs_chunks(spark, sf_dir):
-    """Overlapping word-window chunking (context packing)."""
-    return textstats.chunk_documents(_docs(spark, sf_dir))
-
-
-def q_text_redact_pii(spark, sf_dir):
-    """Deterministic PII scrubbing with redaction counts."""
-    return textstats.redact_pii(_docs(spark, sf_dir))
-
-
-def q_docs_stratified_sample(spark, sf_dir):
-    """Per-language deterministic hash sampling (zero shuffle)."""
-    from rdf_canonize_spark.operators import sampling
-
-    return sampling.stratified_sample(_docs(spark, sf_dir), SAMPLE_RATES)
-
-
-def q_docs_source_mix(spark, sf_dir):
-    """Exact per-source quotas for dataset mixing (hash-order rank)."""
-    from rdf_canonize_spark.operators import sampling
-
-    return sampling.source_mix_quota(_docs(spark, sf_dir), MIX_QUOTAS)
-
-
-def q_docs_decontaminate(spark, sf_dir):
-    """Benchmark decontamination: distinct shared word n-grams per
-    training doc vs a (broadcast) benchmark subset, plus the flag.
-    Benchmark set = every 50th document, so planted contamination is
-    guaranteed (those docs appear in both sets)."""
-    docs = _docs(spark, sf_dir)
-    return dedup.decontaminate(
-        docs, docs.filter(F.col("doc_id") % 50 == 0)
-    )
-
-
-def q_docs_pack_sequences(spark, sf_dir):
-    """Concat-then-chunk sequence packing into a 512-token budget over
-    8 deterministic hash shards."""
-    from rdf_canonize_spark.operators import sampling
-
-    return sampling.pack_sequences(_docs(spark, sf_dir))
-
-
-def q_ann_brute_force(spark, sf_dir):
-    return similarity.brute_force_topk(spark, sf_dir)
-
-
-def q_ann_ivf(spark, sf_dir):
-    """Stride-centroid IVF (diagnostic configuration: K grows with
-    N/stride; kept for continuity with the round-2/3 artifacts --
-    ann_ivf_trained_topk is the scale path)."""
-    return similarity.ivf_topk(spark, sf_dir)
-
-
-def q_semantic_dedup(spark, sf_dir):
-    """SemDeDup-shape embedding dedup: Voronoi-cell-bucketed exact-
-    cosine comparison, keeper = smallest duplicated cell-mate.  The
-    cell join bounds candidates the way LSH tables do, but groups
-    semantically (cosine-close) instead of by random projections.
-    SCALED configuration (round-4 verdict action #2): k is derived
-    from the corpus count at constant target occupancy, so the
-    within-cell pair join stays O(N * occupancy) at any corpus size
-    -- and the oracle recomputes the identical k from COUNT(*)."""
-    return similarity.semantic_dedup(spark, sf_dir)
-
-
-def q_ann_ivf_trained(spark, sf_dir):
-    """FIXED-K IVF -- the scale-correct configuration: centroids are
-    the deterministic init selection (k=16 regardless of corpus size),
-    so the broadcast assignment join stays N x 16 at any N.  Fully
-    oracle-checked (init selection, L2 argmin assignment, nprobe
-    probing, cosine rerank all bit-reproducible in SQL)."""
-    return similarity.ivf_trained_topk(spark, sf_dir)
-
-
-def q_ann_lsh(spark, sf_dir):
-    return similarity.lsh_ann_topk(spark, sf_dir)
-
-
-def q_ann_lsh_banded(spark, sf_dir):
-    """Banded multi-table hyperplane ANN -- the bounded-occupancy
-    scale configuration of lsh_ann_topk (OR-of-tables recall,
-    candidates deduped before the exact rerank)."""
-    return similarity.lsh_ann_topk(spark, sf_dir, n_tables=3, bits=6)
-
-
-def q_embedding_near_dups(spark, sf_dir):
-    """Embedding-cosine near-dup pairs via LSH buckets + exact cosine
-    verification (the dedup-flavored ANN variant)."""
-    return similarity.embedding_near_dup_pairs(spark, sf_dir)
-
-
-def q_embedding_near_dups_banded(spark, sf_dir):
-    """Banded multi-table hyperplane LSH near-dups -- the bounded-
-    occupancy scale path: bits sized to the corpus, recall recovered
-    via OR-of-tables, exact cosine on candidate survivors only."""
-    return similarity.embedding_near_dup_pairs(
-        spark, sf_dir, threshold=0.2, n_tables=3, bits=6
-    )
-
-
-def q_media_features(spark, sf_dir):
-    """Multimodal plumbing: binary payloads -> Arrow-batched feature
-    extraction.  Decode is REAL for uncompressed rasters (pure-Python
-    BMP/PPM parsers); the html corpus takes the deterministic digest
-    fallback ('stubbed'), which the oracle checks alongside the
-    metadata columns."""
-    from rdf_canonize_spark.operators import multimodal
-
-    pages = pages_from_documents(spark, sf_dir)
-    feats = multimodal.extract_media_features(
-        multimodal.attach_media(pages)
-    )
-    return feats.select(
-        "url", "media_type", "media_len", "media_sha256", "decode_status"
-    )
-
-
-def q_media_frames(spark, sf_dir):
-    """Multimodal frame sampling: binary payload -> every-3rd
-    fixed-size frame, one row per frame through a single exploding
-    mapInPandas (decode stubbed; slicing/digests oracle-checked)."""
-    from rdf_canonize_spark.operators import multimodal
-
-    pages = pages_from_documents(spark, sf_dir)
-    return multimodal.sample_frames(multimodal.attach_media(pages))
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Ordering is deliberate: the driver's CORRECTNESS artifact samples
     # a prefix of this registry, so the queries never yet captured in a
-    # driver artifact come FIRST -- the 8 round-5 additions lead, then
-    # the round-4 priority block, then the round-3-verified 50 in
-    # their original order (all 70 prior entries are green in
-    # CORRECTNESS_full_r04.json).
+    # sampled artifact come FIRST -- the round-5 additions lead, then
+    # the round-4 priority block, then the round-3-verified queries in
+    # their original order.
     return {
         "entity_cooccurrence": q_entity_cooccurrence,  # round 5
-        "robots_rules": q_robots_rules,  # round 5
-        "robots_gate": q_robots_gate,  # round 5
-        "docs_quality_threshold": q_quality_threshold,  # round 5
-        "docs_length_histogram": q_length_histogram,  # round 5
-        "url_blocklist": q_url_blocklist,  # round 5
-        "docs_temperature_sample": q_temperature_sample,  # round 5
-        "dedup_incremental": q_incremental_dedup,  # round 5
-        "media_ahash": q_media_ahash,  # round 5
-        "media_ahash_near_dups": q_media_ahash_near_dups,  # round 5
-        "docs_bpe_merges": q_bpe_merges,  # round 5
-        "docs_inverted_index": q_inverted_index,  # round 5
-        "docs_line_filter": q_line_filter,  # round 5
-        "docs_bigram_ppl": q_bigram_ppl,  # round 5
-        "docs_source_profile": q_source_profile,  # round 5
-        "dedup_containment_pairs": q_containment_pairs,  # round 5
-        "docs_nfc_profile": q_nfc_profile,  # round 5
-        "emb_kmeans_quantized": q_kmeans_quantized,  # round 5
-        "docs_tfidf_keywords": q_tfidf_keywords,  # round 5
-        "docs_unigram_ppl": q_unigram_ppl,  # round 5
-        "dedup_duplicate_spans": q_duplicate_spans,  # round 5
-        "dedup_span_stats": q_duplicate_span_stats,  # round 5
-        "dedup_remove_spans": q_remove_duplicate_spans,  # round 5
         "url_canonicalize": q_url_canonicalize,  # round 5
         "url_dedup": q_url_dedup,  # round 5
-        "docs_dsir_weights": q_dsir_weights,  # round 5
-        "docs_quality_gate": q_quality_gate,  # round 5
-        "docs_gate_histogram": q_gate_histogram,  # round 5
-        "docs_build_vocab": q_build_vocab,  # round 5
-        "docs_oov_stats": q_oov_stats,  # round 5
         "events_asof_orders": q_events_asof_orders,
         "events_close_pairs": q_events_close_pairs,
         "lineitem_quantiles": q_lineitem_quantiles,
@@ -1249,37 +675,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lineitem_salted_join": q_lineitem_salted_join,
         "local_supplier_volume": q_local_supplier_volume,
         "canonize_incremental": q_canonize_incremental,
-        "ann_ivf_trained_topk": q_ann_ivf_trained,  # new in round 4
-        "text_repetition": q_text_repetition,  # new in round 4
-        "semantic_dedup": q_semantic_dedup,  # new in round 4
-        "dedup_exact": q_dedup_exact,
-        "paragraph_dedup": q_paragraph_dedup,
-        "boilerplate_segments": q_boilerplate_segments,
-        "remove_boilerplate": q_remove_boilerplate,
-        "dedup_jaccard_pairs": q_dedup_jaccard,
-        "dedup_minhash_signatures": q_dedup_minhash_signatures,
-        "dedup_lsh_candidates": q_dedup_lsh_candidates,
-        "dedup_lsh_verified": q_dedup_lsh_verified,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_simhash": q_dedup_simhash,
-        "text_lang_id": q_text_lang_id,
-        "text_quality": q_text_quality,
-        "text_token_counts": q_text_token_counts,
-        "text_fingerprint": q_text_fingerprint,
-        "docs_chunks": q_docs_chunks,
-        "text_redact_pii": q_text_redact_pii,
-        "docs_stratified_sample": q_docs_stratified_sample,
-        "docs_source_mix": q_docs_source_mix,
-        "docs_decontaminate": q_docs_decontaminate,
-        "docs_pack_sequences": q_docs_pack_sequences,
-        "ann_brute_force_topk": q_ann_brute_force,
-        "ann_ivf_topk": q_ann_ivf,
-        "ann_lsh_topk": q_ann_lsh,
-        "ann_lsh_banded_topk": q_ann_lsh_banded,
-        "embedding_near_dups": q_embedding_near_dups,
-        "embedding_near_dups_banded": q_embedding_near_dups_banded,
-        "media_features": q_media_features,
-        "media_frames": q_media_frames,
         "triples_extract": q_triples_extract,
         "dedup_quads": q_dedup_quads,
         "first_degree_hash": q_first_degree_hash,
@@ -1306,76 +701,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     return {
-        "dedup_exact": oracle_ops.exact_dedup(),
-        "dedup_jaccard_pairs": oracle_ops.jaccard_pairs(threshold=0.5),
-        "dedup_minhash_signatures": oracle_ops.minhash_signatures(),
-        "dedup_lsh_candidates": oracle_ops.lsh_candidates(),
-        "dedup_lsh_verified": oracle_ops.lsh_verified_pairs(threshold=0.5),
-        "dedup_clusters": oracle_ops.dedup_clusters(threshold=0.5),
-        "dedup_simhash": oracle_ops.simhash(),
-        "dedup_duplicate_spans": oracle_ops.duplicate_spans(),
-        "url_canonicalize": oracle_ops.url_canonicalize(),
-        "url_dedup": oracle_ops.url_dedup(),
-        "docs_dsir_weights": oracle_ops.dsir_weights(),
-        "docs_unigram_ppl": oracle_ops.unigram_ppl(
-            ref_predicate="lang = 'en'"
-        ),
-        "docs_tfidf_keywords": oracle_ops.tfidf_keywords(),
-        "emb_kmeans_quantized": oracle_ops.kmeans_quantized(),
-        "docs_nfc_profile": oracle_ops.nfc_profile(),
-        "dedup_containment_pairs": oracle_ops.containment_pairs(),
-        "docs_source_profile": oracle_ops.source_profile(),
-        "docs_line_filter": oracle_ops.line_filter(),
-        "docs_inverted_index": oracle_ops.inverted_index(),
-        "docs_bpe_merges": oracle_ops.bpe_merges(),
-        "media_ahash": oracle_ops.media_ahash(),
-        "dedup_incremental": oracle_ops.incremental_dedup(),
-        "docs_temperature_sample": oracle_ops.temperature_sample(),
+        "url_canonicalize": oracles.url_canonicalize(),
+        "url_dedup": oracles.url_dedup(),
         "entity_cooccurrence": oracles.entity_cooccurrence(),
-        "docs_length_histogram": oracle_ops.length_histogram(),
-        "url_blocklist": oracle_ops.url_blocklist(),
-        "robots_rules": oracle_ops.robots_rules(),
-        "robots_gate": oracle_ops.robots_gate(),
-        "docs_quality_threshold": oracle_ops.quality_threshold(),
-        "media_ahash_near_dups": oracle_ops.ahash_near_dups(),
-        "docs_bigram_ppl": oracle_ops.bigram_ppl(
-            ref_predicate="lang = 'en'"
-        ),
-        "dedup_span_stats": oracle_ops.duplicate_span_stats(),
-        "dedup_remove_spans": oracle_ops.remove_duplicate_spans(),
-        "docs_quality_gate": oracle_ops.quality_gate(),
-        "docs_gate_histogram": oracle_ops.gate_histogram(),
-        "docs_build_vocab": oracle_ops.build_vocab(),
-        "docs_oov_stats": oracle_ops.oov_stats(),
-        "paragraph_dedup": oracle_ops.paragraph_dedup(),
-        "boilerplate_segments": oracle_ops.boilerplate_segments(),
-        "remove_boilerplate": oracle_ops.remove_boilerplate(),
-        "text_lang_id": oracle_ops.lang_id(),
-        "text_quality": oracle_ops.quality_score(),
-        "text_token_counts": oracle_ops.token_counts(),
-        "text_fingerprint": oracle_ops.fingerprint(),
-        "text_repetition": oracle_ops.repetition_stats(),
-        "docs_chunks": oracle_ops.chunk_documents(),
-        "text_redact_pii": oracle_ops.redact_pii(),
-        "docs_stratified_sample": oracle_ops.stratified_sample(SAMPLE_RATES),
-        "docs_source_mix": oracle_ops.source_mix_quota(MIX_QUOTAS),
-        "docs_decontaminate": oracle_ops.decontaminate(),
-        "docs_pack_sequences": oracle_ops.pack_sequences(),
-        "ann_brute_force_topk": oracle_ops.brute_force_topk(),
-        "ann_ivf_topk": oracle_ops.ivf_topk(),
-        "ann_ivf_trained_topk": oracle_ops.ivf_trained_topk(),
-        "semantic_dedup": oracle_ops.semantic_dedup(),
-        "ann_lsh_topk": oracle_ops.lsh_ann_topk(),
-        "ann_lsh_banded_topk": oracle_ops.lsh_ann_topk_banded(
-            n_tables=3, bits=6
-        ),
-        "embedding_near_dups": oracle_ops.embedding_near_dup_pairs(),
-        "embedding_near_dups_banded":
-            oracle_ops.embedding_near_dup_pairs_banded(
-                threshold=0.2, n_tables=3, bits=6
-            ),
-        "media_features": oracle_ops.media_features(),
-        "media_frames": oracle_ops.media_frames(),
         "triples_extract": oracles.triples(),
         "dedup_quads": oracles.dedup(),
         "first_degree_hash": oracles.first_degree_hash(),

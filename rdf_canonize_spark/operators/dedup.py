@@ -1,8 +1,9 @@
-"""Deduplication operators for training-data pipelines.
+"""Near-duplicate detection over document text.
 
-Exact (hash-groupBy), n-gram Jaccard, MinHash+LSH, SimHash -- every
-variant built from Catalyst primitives with an equivalent DuckDB-
-expressible formulation so the driver oracle can verify it.
+Exact (hash-groupBy), n-gram Jaccard, MinHash+LSH, SimHash, segment
+and span dedup -- every variant built from Catalyst primitives and
+checked by the planted-duplicate tests in ``tests/test_operators.py``
+(the DuckDB contract oracles these once had are deleted).
 
 Hash choices are deliberately engine-portable: ``md5``/``sha2`` hex
 strings (identical lowercase output in Spark and DuckDB) rather than
@@ -37,7 +38,7 @@ def near_dup_corpus(spark, sf_dir):
     """documents + a deterministic near-duplicate of every 3rd doc
     (first word dropped) + an exact duplicate of every 10th doc.
     Mirrors a crawl with boilerplate reposts; the construction is pure
-    SQL so the oracle can rebuild it."""
+    SQL."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
@@ -396,17 +397,16 @@ def decontaminate(train_docs, benchmark_docs, n=DECONTAM_NGRAM,
 
 # --- sub-document (paragraph/segment) dedup ----------------------------------
 SEGMENT_WORDS = 12
+# explicit whitespace class: Java \s includes \x0B, RE2 \s does not
+WS_CHARS = " " + chr(9) + chr(10) + chr(11) + chr(12) + chr(13)
 
 
 def _seg_tokens(text_col):
-    """THE segmentation tokenizer: every consumer (segment pass, tail
-    reconstruction, and the DuckDB oracles' string_split_regex twin)
-    must use this exact expression or segment boundaries silently
-    disagree.  Whitespace is the EXPLICIT class from textstats (Java
-    \\s includes \\x0B, RE2 \\s does not -- engine-native \\s would
-    silently split \\x0B-bearing text differently on the two sides)."""
-    from .textstats import WS_CHARS
-
+    """THE segmentation tokenizer: every consumer (segment pass and
+    tail reconstruction) must use this exact expression or segment
+    boundaries silently disagree.  Whitespace is the EXPLICIT class
+    ``WS_CHARS`` (engine-native \\s would split \\x0B-bearing text
+    differently in Java and RE2 engines)."""
     return F.split(F.trim(F.col(text_col)), "[" + WS_CHARS + "]+")
 
 

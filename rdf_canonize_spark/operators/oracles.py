@@ -527,3 +527,98 @@ def entity_components():
     )
     SELECT a AS node, MIN(b) AS component FROM reach GROUP BY a
     """
+
+
+_URL_CORPUS_CTE = """
+ub AS (
+  SELECT doc_id,
+    CAST(floor(doc_id / 7) AS BIGINT) AS block,
+    CAST(CAST(floor(doc_id / 7) AS BIGINT) % 3 AS VARCHAR) AS pg
+  FROM documents
+),
+urls AS (
+  SELECT doc_id,
+    (CASE WHEN doc_id % 2 = 0 THEN 'http://' ELSE 'HTTPS://' END)
+    || (CASE WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE '' END)
+    || 'site' || CAST(block % 20 AS VARCHAR)
+    || (CASE WHEN doc_id % 4 = 0 THEN '.Example.COM'
+             ELSE '.example.com' END)
+    || (CASE WHEN doc_id % 5 = 0 THEN ':80' ELSE '' END)
+    || '/articles/' || CAST(block AS VARCHAR)
+    || (CASE WHEN doc_id % 6 = 0 THEN '/' ELSE '' END)
+    || (CASE WHEN doc_id % 4 = 0
+             THEN '?utm_source=feed&ref=rss&page=' || pg
+             WHEN doc_id % 4 = 1 THEN '?page=' || pg || '&sort=new'
+             WHEN doc_id % 4 = 2 THEN '?sort=new&page=' || pg
+             ELSE '?page=' || pg END)
+    || (CASE WHEN doc_id % 6 = 0
+             THEN '#section-' || CAST(doc_id AS VARCHAR) ELSE '' END)
+    AS url
+  FROM ub
+)"""
+
+# Canonicalization twin of urls._canonical_expr.  Anchored regexes
+# only: Spark regexp_replace replaces every match, DuckDB the first;
+# anchoring makes them identical.  The param-filter predicate text
+# matches the Spark SQL lambda body.
+_URL_CANON_CTE = r"""
+c1 AS (
+  SELECT doc_id, url,
+    regexp_replace(regexp_replace(url, '#.*$', ''),
+                   '^[a-zA-Z][a-zA-Z0-9+.-]*://', '') AS rest
+  FROM urls
+),
+c2 AS (
+  SELECT doc_id, url, rest,
+    regexp_extract(rest, '^[^/?]*') AS auth,
+    substr(rest, length(regexp_extract(rest, '^[^/?]*')) + 1) AS pathq
+  FROM c1
+),
+c3 AS (
+  SELECT doc_id, url, pathq,
+    regexp_replace(regexp_replace(regexp_replace(
+      lower(auth), '^[^@]*@', ''), ':[0-9]*$', ''), '^www\.', '')
+      AS host,
+    regexp_extract(pathq, '^[^?]*') AS path
+  FROM c2
+),
+c4 AS (
+  SELECT doc_id, url, host,
+    CASE WHEN regexp_replace(path, '/+$', '') = '' THEN '/'
+         ELSE regexp_replace(path, '/+$', '') END AS path_c,
+    CASE WHEN length(pathq) > length(path)
+         THEN substr(pathq, length(path) + 2) ELSE '' END AS q
+  FROM c3
+),
+c5 AS (
+  SELECT doc_id, url, path_c,
+    list_sort(list_filter(string_split(q, '&'),
+      p -> p <> '' AND NOT (p LIKE 'utm_%'
+        OR split_part(p, '=', 1) IN
+           ('fbclid', 'gclid', 'msclkid', 'ref')))) AS kept,
+    array_to_string(list_reverse(string_split(host, '.')), ',')
+      AS surt
+  FROM c4
+),
+canon AS (
+  SELECT doc_id, url,
+    surt || ')' || path_c
+    || (CASE WHEN len(kept) > 0
+             THEN '?' || array_to_string(kept, '&') ELSE '' END)
+      AS canonical_url
+  FROM c5
+)"""
+
+
+def url_canonicalize():
+    """Mirrors urls.canonical_urls over the synthetic crawl corpus."""
+    return f"""WITH {_URL_CORPUS_CTE.strip()},{_URL_CANON_CTE}
+SELECT doc_id, url, canonical_url FROM canon"""
+
+
+def url_dedup():
+    """Mirrors urls.url_dedup: canonical-key groups fetched > once."""
+    return f"""WITH {_URL_CORPUS_CTE.strip()},{_URL_CANON_CTE}
+SELECT canonical_url, COUNT(*) AS n_fetches,
+       MIN(url) AS keeper_url
+FROM canon GROUP BY canonical_url HAVING COUNT(*) > 1"""

@@ -10,7 +10,7 @@ form CC's own index uses: reversed host labels + ``)`` + path +
 sorted surviving query), and ``url_dedup`` groups on it.
 
 Engine parity notes (the oracle twin is
-``oracle_ops.url_canonicalize``/``url_dedup``):
+``oracles.url_canonicalize``/``oracles.url_dedup``):
 * every regex is ANCHORED (single possible match) because Spark's
   ``regexp_replace`` replaces all matches while DuckDB's replaces the
   first -- anchoring makes the two behaviors identical;
@@ -109,13 +109,13 @@ def _canonical_expr():
         f"OR split_part(p, '=', 1) IN ({keys}))))"
     )
     surt = F.concat_ws(",", F.reverse(F.split(host, "\\.")))
-    return nofrag, q, kept, surt, path_c
+    return q, kept, surt, path_c
 
 
 def canonical_urls(df):
     """(all input columns, canonical_url): SURT-form canonical key.
     Narrow projection, zero shuffles, zero UDFs."""
-    _, q, kept, surt, path_c = _canonical_expr()
+    q, kept, surt, path_c = _canonical_expr()
     with_q = df.withColumn("__q", q)
     canon = F.concat(
         surt,
@@ -148,59 +148,3 @@ def url_dedup(df):
         .filter(F.col("n_fetches") > 1)
     )
 
-
-# demo blocklist for the contract query (UT1-style domain curation);
-# production swaps in the real list, same shapes
-BLOCKED_HOSTS = ("site3.example.com", "site13.example.com")
-BLOCKED_SUFFIXES = (".example.net",)
-
-
-def blocklist_filter(df, blocked_hosts=BLOCKED_HOSTS,
-                     blocked_suffixes=BLOCKED_SUFFIXES):
-    """Domain blocklist gate -- the UT1/adult-list curation step every
-    crawl pipeline runs before content filtering: extract the
-    normalized host (lowercased, userinfo/port/``www.`` stripped, the
-    same anchored-regex chain as ``canonical_urls``) and flag exact
-    host matches and registered-suffix matches.  Output ``(doc_id,
-    url, host, block_reason, blocked)`` with ``block_reason`` in
-    ('host', 'suffix', NULL); fixed rule order host -> suffix.
-
-    Scale shape: pure Catalyst projection (the list folds into a
-    CASE/IN -- real blocklists at ~1M entries become a broadcast
-    left-semi join on the same host key, same plan shape); zero
-    shuffles, filter-pushdown friendly."""
-    rest = F.regexp_replace(
-        F.regexp_replace(F.col("url"), "#.*$", ""),
-        "^[a-zA-Z][a-zA-Z0-9+.-]*://",
-        "",
-    )
-    auth = F.regexp_extract(rest, "^[^/?]*", 0)
-    host = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(auth), "^[^@]*@", ""),
-            ":[0-9]*$",
-            "",
-        ),
-        "^www\\.",
-        "",
-    )
-    suffix_hit = F.lit(False)
-    for sfx in blocked_suffixes:
-        suffix_hit = suffix_hit | F.col("host").endswith(sfx)
-    host_hit = (
-        F.col("host").isin(*blocked_hosts) if blocked_hosts else F.lit(False)
-    )
-    reason = (
-        F.when(host_hit, F.lit("host"))
-        .when(suffix_hit, F.lit("suffix"))
-    )
-    return (
-        df.select("doc_id", "url", host.alias("host"))
-        .select(
-            "doc_id",
-            "url",
-            "host",
-            reason.alias("block_reason"),
-            reason.isNotNull().alias("blocked"),
-        )
-    )

@@ -27,12 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .gazetteer import (
-    RELATIONS,
-    SURFACES,
-    sql_array_relations,
-    sql_array_surfaces,
-)
+from .gazetteer import sql_array_relations, sql_array_surfaces
 
 # epoch 2026-01-01T00:00:00Z
 _EPOCH = 1767225600
@@ -62,27 +57,6 @@ def _statements_sql(k="k"):
             element_at({surf}, cast(pmod({k} * 11 + i * 17 + 3, 200) as int) + 1),
             ' .'
           )
-        ),
-        ' '
-      )
-    """
-
-
-def duckdb_statements_sql(k="k"):
-    """Same closed-form statement text in DuckDB SQL (oracle side)."""
-    surf = "[" + ", ".join("'%s'" % s for s in SURFACES) + "]"
-    rel = "[" + ", ".join("'%s'" % r for r in RELATIONS) + "]"
-    return f"""
-      array_to_string(
-        list_transform(
-          range(0, ({k} % 5) + 1),
-          i -> 'KG: '
-            || {surf}[(({k} * 7 + i * 13) % 200) + 1]
-            || ' '
-            || {rel}[(({k} + i) % 8) + 1]
-            || ' '
-            || {surf}[(({k} * 11 + i * 17 + 3) % 200) + 1]
-            || ' .'
         ),
         ' '
       )

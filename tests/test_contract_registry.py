@@ -17,35 +17,8 @@ import __spark_entry__ as entrymod
 # round-3/4 priority block follows
 PRIORITY_PREFIX = [
     "entity_cooccurrence",
-    "robots_rules",
-    "robots_gate",
-    "docs_quality_threshold",
-    "docs_length_histogram",
-    "url_blocklist",
-    "docs_temperature_sample",
-    "dedup_incremental",
-    "media_ahash",
-    "media_ahash_near_dups",
-    "docs_bpe_merges",
-    "docs_inverted_index",
-    "docs_line_filter",
-    "docs_bigram_ppl",
-    "docs_source_profile",
-    "dedup_containment_pairs",
-    "docs_nfc_profile",
-    "emb_kmeans_quantized",
-    "docs_tfidf_keywords",
-    "docs_unigram_ppl",
-    "dedup_duplicate_spans",
-    "dedup_span_stats",
-    "dedup_remove_spans",
     "url_canonicalize",
     "url_dedup",
-    "docs_dsir_weights",
-    "docs_quality_gate",
-    "docs_gate_histogram",
-    "docs_build_vocab",
-    "docs_oov_stats",
     "events_asof_orders",
     "events_close_pairs",
     "lineitem_quantiles",
@@ -63,16 +36,13 @@ PRIORITY_PREFIX = [
     "lineitem_salted_join",
     "local_supplier_volume",
     "canonize_incremental",
-    "ann_ivf_trained_topk",
-    "text_repetition",
-    "semantic_dedup",
 ]
 
 
 def test_registry_shape_and_priority_prefix():
     qs = entrymod.queries()
     names = list(qs)
-    assert len(names) == len(set(names)) == 99
+    assert len(names) == len(set(names)) == 41
     assert names[: len(PRIORITY_PREFIX)] == PRIORITY_PREFIX
     assert all(callable(fn) for fn in qs.values())
 

@@ -65,11 +65,8 @@ def test_filter_pushdown_reaches_parquet_scan(spark, sf_dir):
 def test_global_window_detection(spark):
     """count_global_windows flags only UNPARTITIONED Window operators
     (round-4 verdict action #7: the plan audit fails on unfootnoted
-    ones).  init_centroids carries exactly one -- its bounded
-    candidate-pool ranking -- which is the footnoted case."""
+    ones)."""
     from pyspark.sql import Window
-
-    from rdf_canonize_spark.operators import similarity
 
     df = spark.range(200).select(
         F.col("id").alias("vec_id"),
@@ -91,10 +88,6 @@ def test_global_window_detection(spark):
         "rn", F.row_number().over(Window.orderBy("vec_id"))
     )
     assert checks.count_global_windows(glob) == 1
-    cents = similarity.init_centroids(
-        df.select("vec_id", "v"), k=8
-    )
-    assert checks.count_global_windows(cents) == 1
 
 
 def test_temporal_join_plan_shapes(spark, sf_dir):

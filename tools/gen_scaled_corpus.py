@@ -8,9 +8,7 @@ prefixes the text with a replica tag, so URL-keyed pipeline stages
 see genuinely distinct documents (no accidental 10x exact-dup
 collapse in the canonize path) while the content statistics stay
 crawl-like.  Embeddings are replicated with re-ids ONLY: every
-vector gains n-1 exact twins, which is both realistic (recrawl) and
-the worst case for the within-cell pair joins -- a deliberate
-stress of the dedup family's occupancy bounds.
+vector gains n-1 exact twins, as a recrawl would produce.
 
 Usage: python3 tools/gen_scaled_corpus.py [src_sf_dir] [dst_dir] [n]
 Defaults: /root/testdata/sf0.1 /tmp/sfx1 10

@@ -22,92 +22,23 @@ sys.path.insert(0, "/root/repo")
 
 # Nested-loop plans that are BY DESIGN, with why:
 NLJ_OK = {
-    # every query x every vector IS the brute-force definition; the
-    # IVF / LSH variants are the scale paths
-    "ann_brute_force_topk": "exhaustive baseline (cross product is the spec)",
     # 1-row broadcast build side: the canonical way to attach one
     # map/scalar to all rows; O(n), no amplification
     "entity_canonicalized_quads": "single-row broadcast map attach",
-    # corpus x broadcast-centroids IS the IVF assignment definition:
-    # every vector scores against every (tiny) centroid; bounded K-fold
-    # amplification, not a quadratic blow-up
-    "ann_ivf_topk": "broadcast-centroid assignment (N x K by definition)",
-    # same assignment shape, but K FIXED at 16 (init_centroids) -- the
-    # scale-correct configuration the round-3 judge asked to
-    # oracle-check; amplification is a constant 16x, independent of N
-    "ann_ivf_trained_topk":
-        "broadcast-centroid assignment (N x 16, K fixed by design)",
-    # SemDeDup uses the same broadcast assignment with k scaled to the
-    # corpus (constant occupancy); the dedup comparison itself is a
-    # cell-keyed equi-join, never a cross
-    "semantic_dedup":
-        "broadcast-centroid assignment (N x k, k corpus-scaled)",
     # 1-row broadcast build side (the global total from the sketch
     # pass) attached to the candidate counts; O(n), no amplification
     "word_heavy_hitters": "single-row broadcast total attach",
-    # 1-row broadcast build side (the corpus token totals) attached
-    # to the <=64-row bucket lookup table; O(buckets), no
-    # amplification -- the corpus itself never crosses the BNLJ
-    "docs_dsir_weights": "single-row broadcast totals attach "
-                         "(bucket LUT side, <= n_buckets rows)",
-    # two 1-row broadcast build sides: the (T, V) smoothing totals
-    # attached to the V-row probability LUT and to the OOV coalesce;
-    # the corpus-sized score join itself is a token-keyed equi-join
-    "docs_unigram_ppl": "single-row broadcast totals attach "
-                        "(smoothing scalars T and V, 1 row x2)",
-    # 1-row broadcast build side: the context-vocabulary size V for
-    # the add-one conditional; both LM joins are token-keyed equi
-    "docs_bigram_ppl": "single-row broadcast totals attach "
-                       "(smoothing scalar V)",
-    # 1-row broadcast build side: the corpus doc count N for the
-    # smoothed idf; the score join itself is a token-keyed equi-join
-    "docs_tfidf_keywords": "single-row broadcast corpus-count attach "
-                           "(idf scalar N)",
-    # same broadcast-centroid assignment shape as the IVF family:
-    # each Lloyd round is N x k with k FIXED -- constant-factor
-    # amplification however large the corpus grows
-    "emb_kmeans_quantized":
-        "broadcast-centroid Lloyd assignment (N x k, k fixed)",
-    # 1-row broadcast build side PER ROUND: each learned merge pair
-    # joins onto the vocabulary-sized word table (LEFT so an empty
-    # round is a no-op); 6 rounds -> 6 footnoted 1-row BNLJs
-    "docs_bpe_merges": "single-row broadcast merge-pair attach "
-                       "(1 row per round x 6 rounds, vocab-sized "
-                       "probe side)",
     # 1-row broadcast build side: the capped-set document count N for
     # the PMI denominator; the pair join itself is a url-keyed equi
     "entity_cooccurrence": "single-row broadcast doc-count attach "
                            "(PMI scalar N)",
-    # 1-row broadcast build side: the corpus totals (sum of weights,
-    # doc count) attached to the source-cardinality probability table
-    "docs_temperature_sample": "single-row broadcast totals attach "
-                               "(probability table side, "
-                               "source-cardinality rows)",
 }
 
 # Unpartitioned (single-task) Window operators that are BY DESIGN,
 # with why the frame is provably bounded (round-4 verdict action #7:
 # a global window over an unbounded frame is a scale bug; these are
-# footnoted, anything else fails the report):
-GLOBAL_WIN_OK = {
-    # init_centroids ranks its candidate POOL (stride matches UNION the
-    # k smallest vec_ids, <= ~2k rows by construction) -- never the
-    # corpus; the TakeOrderedAndProject limit bounds the pool before
-    # the window sees it
-    "ann_ivf_trained_topk":
-        "init_centroids pool ranking (pool <= ~2k rows by construction)",
-    "semantic_dedup":
-        "init_centroids pool ranking (pool <= ~2k rows by construction)",
-    "emb_kmeans_quantized":
-        "init_centroids pool ranking (pool <= ~2k rows by construction)",
-    # build_vocab assigns ids over the ALREADY-LIMITED top-k frame
-    # (TakeOrderedAndProject bounds it to k=256 rows before the
-    # window); oov_stats embeds the same vocab construction
-    "docs_build_vocab":
-        "vocab id assignment (frame = top-k limit, k=256 rows)",
-    "docs_oov_stats":
-        "vocab id assignment (frame = top-k limit, k=256 rows)",
-}
+# footnoted, anything else fails the report).  No query needs one.
+GLOBAL_WIN_OK: dict[str, str] = {}
 
 
 def main():
