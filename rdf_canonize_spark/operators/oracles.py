@@ -455,9 +455,11 @@ def entity_pagerank(n_iter=10, damping_num=85, damping_den=100,
     on non-negative ints), so equality is bit-exact by construction --
     no float rounding boundary (round-4 verdict action #4).  SUMs are
     CAST back to BIGINT (DuckDB SUM(BIGINT) is HUGEINT).  Base tables
-    are MATERIALIZED: DuckDB inlines plain CTEs, and 10 unrolled
-    iterations re-opening the parquet scan per reference exhausts the
-    file-descriptor limit."""
+    and every ``r{i}`` are MATERIALIZED: DuckDB inlines plain CTEs, so
+    10 unrolled iterations would re-open the parquet scan per reference
+    (exhausting the file-descriptor limit), and each ``r{i}``, read by
+    both ``dm{i+1}`` and ``c{i+1}``, would double the plan per step
+    (2^10 copies, out of memory)."""
     num, den = int(damping_num), int(damping_den)
     base_num = ((den - num) * scale) // den  # exact int, both engines
     ent_edges_mat = _ENT_EDGES.replace(
@@ -473,7 +475,7 @@ nn AS MATERIALIZED (SELECT COUNT(*) AS n FROM pnodes),
 pdeg AS MATERIALIZED (
   SELECT src AS node, COUNT(*) AS deg FROM ent_edges GROUP BY src
 ),
-r0 AS (
+r0 AS MATERIALIZED (
   SELECT node, CAST({scale} // nn.n AS BIGINT) AS rank_fp
   FROM pnodes, nn
 )"""]
@@ -492,7 +494,7 @@ c{i} AS (
   JOIN pdeg d ON d.node = e.src
   GROUP BY e.dst
 ),
-r{i} AS (
+r{i} AS MATERIALIZED (
   SELECT n.node,
     CAST({base_num} // nn.n
       + ({num} * (COALESCE(c.in_contrib, 0) + dm.dm // nn.n)) // {den}

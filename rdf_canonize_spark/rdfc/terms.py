@@ -27,15 +27,6 @@ RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDF_LANGSTRING = RDF + "langString"
 XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 
-KIND_NAMES = {
-    NAMED: "NamedNode",
-    BLANK: "BlankNode",
-    LITERAL: "Literal",
-    DEFAULT_GRAPH: "DefaultGraph",
-}
-NAME_KINDS = {v: k for k, v in KIND_NAMES.items()}
-
-
 def named(value):
     return (NAMED, value, None, None)
 
@@ -78,30 +69,6 @@ def quad_from_rdfjs(q):
         term_from_rdfjs(q["object"]),
         term_from_rdfjs(q["graph"]),
     )
-
-
-def term_to_rdfjs(t):
-    kind, value, datatype, language = t
-    if kind == LITERAL:
-        out = {
-            "termType": "Literal",
-            "value": value,
-            "datatype": {"termType": "NamedNode", "value": datatype},
-        }
-        if language:
-            out["language"] = language
-        return out
-    return {"termType": KIND_NAMES[kind], "value": value}
-
-
-def quad_to_rdfjs(q):
-    s, p, o, g = q
-    return {
-        "subject": term_to_rdfjs(s),
-        "predicate": term_to_rdfjs(p),
-        "object": term_to_rdfjs(o),
-        "graph": term_to_rdfjs(g),
-    }
 
 
 def utf16_sort_key(s):

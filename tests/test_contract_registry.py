@@ -60,3 +60,18 @@ def test_every_query_has_an_oracle():
         )
         for sql in oracles.values()
     )
+
+
+def test_entity_pagerank_oracle_runs_in_bounded_memory(sf_dir):
+    """The 10 unrolled PageRank iterations each read the previous
+    ranks twice; unless every ``r{i}`` is materialized, DuckDB inlines
+    the chain into 2^10 copies and runs out of memory."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("SET memory_limit='1GB'")
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
+    )
+    rows = con.execute(entrymod.oracle_sql()["entity_pagerank"]).fetchall()
+    assert len(rows) == 150

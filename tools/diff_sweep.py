@@ -10,11 +10,12 @@ Prints a one-line JSON summary; exits 1 on any mismatch.
 from __future__ import annotations
 
 import json
+import os
 import random
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 NODE_RUNNER = """
 const c = require('/root/reference/lib/index.js');

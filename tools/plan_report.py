@@ -14,10 +14,12 @@ Usage: PYTHONPATH=. python3 tools/plan_report.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 # Nested-loop plans that are BY DESIGN, with why:
@@ -119,7 +121,7 @@ def main():
         "executed but are not visible in the audited plan — the row "
         "covers only the post-checkpoint tail."
     )
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote PLANS.md ({len(rows)} queries)")
     bad = [r for r in rows

@@ -33,8 +33,8 @@ def main(argv=None):
     src.add_argument("--synth-docs", type=int,
                      help="generate N synthetic pages")
     src.add_argument("--heavy-docs", type=int,
-                     help="generate N heavy synthetic pages (the bench "
-                          "scaling corpus; ~20 quads/doc)")
+                     help="generate N heavy synthetic pages (kgbench's "
+                          "kg_heavy corpus; ~20 quads/doc)")
     p.add_argument("--out", help="output dir (enables checkpointed write)")
     p.add_argument("--batch-id", type=int, default=0)
     p.add_argument("--max-work-factor", type=float, default=3)
