@@ -6,6 +6,9 @@ partition-parallel.  This is the one stage that genuinely cannot be
 expressed in DataFrame algebra: hash-n-degree-quads is sequential,
 stateful, recursive, and data-dependent (see SURVEY.md O9), exactly
 what a Python UDF is for.  Everything around it stays in Catalyst.
+The ``.nq`` file source (``sources/nquads_io``) runs the same
+per-document kernel and ``flush`` straight from its file rows, since
+a file row is already a whole document.
 
 Scale properties:
 
@@ -27,7 +30,9 @@ from __future__ import annotations
 
 import hashlib
 
+import pyarrow as pa
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -211,6 +216,22 @@ _COLS = ["s_kind", "s", "p", "o_kind", "o",
          "o_datatype", "o_lang", "g_kind", "g"]
 
 
+_ARROW_SCHEMA = to_arrow_schema(CANONICAL_SCHEMA)
+
+
+def flush(results):
+    """Per-document result dicts (``_canonize_rows_for_url``'s return
+    contract) -> one ``CANONICAL_SCHEMA`` Arrow batch: the output
+    conversion of every canonize kernel."""
+    arrays = []
+    for field in _ARROW_SCHEMA:
+        col = [r[field.name] for r in results]
+        if field.name == "label_map":
+            col = [None if m is None else list(m.items()) for m in col]
+        arrays.append(pa.array(col, field.type))
+    return pa.RecordBatch.from_arrays(arrays, schema=_ARROW_SCHEMA)
+
+
 def make_canonize_arrow_fn(max_work_factor=3, doc_timeout_ms=0,
                            max_doc_quads=0,
                            message_digest_algorithm="sha256",
@@ -223,51 +244,12 @@ def make_canonize_arrow_fn(max_work_factor=3, doc_timeout_ms=0,
     boundaries never split a document's output.  The Arrow<->Python
     boundary is raw ``to_pylist`` / ``RecordBatch.from_arrays``.
     """
-    import pyarrow as pa
-
-    out_type = pa.schema(
-        [
-            ("url", pa.string()),
-            ("nquads", pa.string()),
-            ("label_map", pa.map_(pa.string(), pa.string())),
-            ("n_quads", pa.int32()),
-            ("n_bnodes", pa.int32()),
-            ("deep_iterations", pa.int64()),
-            ("quads_hash", pa.string()),
-            ("error", pa.string()),
-            ("input_hash", pa.string()),
-        ]
-    )
-
-    def flush(results):
-        cols = list(zip(*results)) if results else [[]] * 9
-        arrays = [
-            pa.array(cols[0], pa.string()),
-            pa.array(cols[1], pa.string()),
-            pa.array(
-                [None if m is None else list(m.items()) for m in cols[2]],
-                pa.map_(pa.string(), pa.string()),
-            ),
-            pa.array(cols[3], pa.int32()),
-            pa.array(cols[4], pa.int32()),
-            pa.array(cols[5], pa.int64()),
-            pa.array(cols[6], pa.string()),
-            pa.array(cols[7], pa.string()),
-            pa.array(cols[8], pa.string()),
-        ]
-        return pa.RecordBatch.from_arrays(arrays, schema=out_type)
-
     _kernel = kernel_fn or _canonize_rows_for_url
 
     def canonize_doc(url, rows):
-        r = _kernel(
+        return _kernel(
             url, rows, max_work_factor, doc_timeout_ms, max_doc_quads,
             message_digest_algorithm,
-        )
-        return (
-            r["url"], r["nquads"], r["label_map"], r["n_quads"],
-            r["n_bnodes"], r["deep_iterations"], r["quads_hash"],
-            r["error"], r["input_hash"],
         )
 
     def canonize_partition(batches):

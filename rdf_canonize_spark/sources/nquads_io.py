@@ -1,28 +1,34 @@
 """N-Quads file source and canonical N-Quads sink.
 
-Source: each ``.nq`` file is one RDF dataset (one document).
-``spark.read.text(..., wholetext=True)`` gives (path, content) rows;
-parsing runs batched in Arrow with the same grammar/dedup semantics as
-the reference parser (``rdfc.nquads.parse``), including the exact
-``N-Quads parse error on line N.`` errors routed to an ``error``
-column.
+Source: each ``.nq`` file is one RDF dataset (one document).  A
+``binaryFile`` scan gives one (url, content) row per file; parsing
+(``_parse_file``) has the reference parser's grammar and dedup
+semantics (``rdfc.nquads.parse``), including the exact ``N-Quads parse
+error on line N.`` text, which lands in an ``error`` column
+(quarantine, not job failure).
+
+* ``canonize_nquads_files`` -- the deploy path: one ``mapInArrow``
+  stage parses each file once and canonizes it with the per-document
+  kernel, straight from the file row.
+* ``read_nquads`` -- the same parse exploded into the flattened
+  quad-table schema, for callers that compose with the quad-table
+  operators (``canonize_documents`` with other settings, relabel).
 
 Sink: canonical per-document N-Quads back to text, plus a
 single-file globally-sorted dump (explicit ``orderBy`` -- determinism
 at dataset level only ever comes from an explicit sort).
 
-At scale: file-granular parallelism (one task per file split), no
-shuffle until/unless the caller groups; quad rows come out in the
-standard flattened quad-table schema so every downstream operator
-(dedup, canonize, relabel) composes.
+At scale: file-granular parallelism; the deploy path's only exchange
+is a round-robin repartition of the file rows across cores.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     IntegerType,
     StringType,
@@ -30,8 +36,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..pipeline.canon_stage import (
+    CANONICAL_SCHEMA,
+    _canonize_rows_for_url,
+    flush,
+)
 from ..rdfc import nquads
-from ..rdfc.terms import DEFAULT_GRAPH, LITERAL
+from ..rdfc.terms import LITERAL
 
 QUAD_ROWS_SCHEMA = StructType(
     [
@@ -48,14 +59,6 @@ QUAD_ROWS_SCHEMA = StructType(
         StructField("error", StringType(), True),
     ]
 )
-
-
-def _null_row(url, error=None):
-    return {
-        "url": url, "s_kind": None, "s": None, "p": None,
-        "o_kind": None, "o": None, "o_datatype": None, "o_lang": None,
-        "g_kind": None, "g": None, "error": error,
-    }
 
 
 # Spark/Arrow strings are UTF-8: an unpaired surrogate (legal in the
@@ -81,39 +84,61 @@ def _has_surrogate(dataset):
     return False
 
 
+def _parse_file(content):
+    """One file's text -> ``(rows, error)``.
+
+    ``rows`` are the file's quad-table term rows, ordered as
+    ``canon_stage._COLS`` (the tuples the canonize kernel takes); a
+    whitespace-only file gives ``[]``.  A grammar error or an unpaired
+    surrogate gives ``(None, <quarantine text>)``."""
+    try:
+        dataset = nquads.parse(content)
+    except nquads.NQuadsParseError as e:
+        return None, str(e)
+    if _has_surrogate(dataset):
+        return None, SURROGATE_ERROR
+    return [
+        (
+            s[0], s[1], p[1], o[0], o[1],
+            o[2] if o[0] == LITERAL else None,
+            o[3] if o[0] == LITERAL else None,
+            g[0], g[1],
+        )
+        for s, p, o, g in dataset
+    ], None
+
+
+def _files(spark, path):
+    """One (url, content) row per file."""
+    # binaryFile (not text/wholetext): represents 0-byte files and
+    # avoids any line-splitting before the grammar sees the bytes
+    return (
+        spark.read.format("binaryFile")
+        .load(path)
+        .select(
+            F.col("path").alias("url"),
+            F.decode(F.col("content"), "UTF-8").alias("content"),
+        )
+    )
+
+
+_QUAD_ROWS_ARROW = to_arrow_schema(QUAD_ROWS_SCHEMA)
+
+
 def _parse_batch(batches):
-    for pdf in batches:
+    for batch in batches:
         out = []
-        for url, content in zip(pdf["url"], pdf["content"]):
-            try:
-                dataset = nquads.parse(content)
-            except nquads.NQuadsParseError as e:
-                out.append(_null_row(url, str(e)))
-                continue
-            if _has_surrogate(dataset):
-                out.append(_null_row(url, SURROGATE_ERROR))
-                continue
-            if not dataset:
-                out.append(_null_row(url))
-            for s, p, o, g in dataset:
-                out.append(
-                    {
-                        "url": url,
-                        "s_kind": s[0],
-                        "s": s[1],
-                        "p": p[1],
-                        "o_kind": o[0],
-                        "o": o[1],
-                        "o_datatype": o[2] if o[0] == LITERAL else None,
-                        "o_lang": o[3] if o[0] == LITERAL else None,
-                        "g_kind": g[0],
-                        "g": g[1],
-                        "error": None,
-                    }
-                )
-        yield pd.DataFrame(
-            out,
-            columns=[f.name for f in QUAD_ROWS_SCHEMA.fields],
+        for url, content in zip(batch.column(0).to_pylist(),
+                                batch.column(1).to_pylist()):
+            rows, error = _parse_file(content)
+            if rows:
+                out.extend((url, *row, None) for row in rows)
+            else:  # error or empty file: one null-term marker row
+                out.append((url, *[None] * 9, error))
+        cols = list(zip(*out)) if out else [[]] * len(_QUAD_ROWS_ARROW)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(cols, _QUAD_ROWS_ARROW)],
+            schema=_QUAD_ROWS_ARROW,
         )
 
 
@@ -126,17 +151,7 @@ def read_nquads(spark, path):
     '').  NOTE: Spark's file sources skip 0-byte files entirely; a
     truly empty file is invisible to any file-based scan.
     """
-    # binaryFile (not text/wholetext): represents 0-byte files and
-    # avoids any line-splitting before the grammar sees the bytes
-    raw = (
-        spark.read.format("binaryFile")
-        .load(path)
-        .select(
-            F.col("path").alias("url"),
-            F.decode(F.col("content"), "UTF-8").alias("content"),
-        )
-    )
-    return raw.mapInPandas(_parse_batch, QUAD_ROWS_SCHEMA)
+    return _files(spark, path).mapInArrow(_parse_batch, QUAD_ROWS_SCHEMA)
 
 
 def quad_rows(parsed_df):
@@ -152,60 +167,65 @@ def parse_errors(parsed_df):
     )
 
 
-def canonize_nquads_files(spark, path, max_work_factor=3):
-    """End-to-end: .nq files -> per-file canonical N-Quads DataFrame
-    (url, nquads, label_map, ..., error)."""
-    from ..pipeline.canon_stage import canonize_documents
+_NULL_RESULT = dict.fromkeys(CANONICAL_SCHEMA.fieldNames())
 
-    parsed = read_nquads(spark, path)
-    good = quad_rows(parsed)
-    canonical = canonize_documents(
-        good, max_work_factor=max_work_factor, strategy="repartition"
+
+def _canonize_file_batch(max_work_factor):
+    def canonize_files(batches):
+        for batch in batches:
+            results = []
+            for url, content in zip(batch.column(0).to_pylist(),
+                                    batch.column(1).to_pylist()):
+                rows, error = _parse_file(content)
+                if error is None:
+                    # an empty file's row set canonizes to '' with
+                    # zero counts and sha256('') for both hashes
+                    results.append(
+                        _canonize_rows_for_url(url, rows, max_work_factor)
+                    )
+                else:
+                    results.append({**_NULL_RESULT, "url": url,
+                                    "error": error})
+            yield flush(results)
+
+    return canonize_files
+
+
+def canonize_nquads_files(spark, path, max_work_factor=3):
+    """End-to-end: .nq files -> per-file canonical N-Quads DataFrame in
+    ``CANONICAL_SCHEMA`` (url, nquads, label_map, ..., error).
+
+    One Python stage: ``binaryFile -> repartition(defaultParallelism)
+    -> mapInArrow``.  A file row is already a whole document, so each
+    file is parsed once and canonized by the same per-document kernel
+    as the quad-table path (``_canonize_rows_for_url``) -- no quad rows
+    cross into the JVM and no shuffle by url.  The round-robin
+    repartition spreads expensive (poison) files across cores.  A file
+    that fails the grammar or holds an unpaired surrogate becomes a
+    row with only ``url`` and ``error`` set."""
+    return (
+        _files(spark, path)
+        .repartition(spark.sparkContext.defaultParallelism)
+        .mapInArrow(_canonize_file_batch(max_work_factor), CANONICAL_SCHEMA)
     )
-    # carry parse failures through as quarantined rows
-    errs = parse_errors(parsed).select(
-        "url",
-        F.lit(None).cast("string").alias("nquads"),
-        F.lit(None).cast("map<string,string>").alias("label_map"),
-        F.lit(None).cast("int").alias("n_quads"),
-        F.lit(None).cast("int").alias("n_bnodes"),
-        F.lit(None).cast("long").alias("deep_iterations"),
-        F.lit(None).cast("string").alias("quads_hash"),
-        "error",
-        F.lit(None).cast("string").alias("input_hash"),
-    )
-    # empty files: canonical form is ''
-    empties = (
-        parsed.filter(F.col("error").isNull() & F.col("s_kind").isNull())
-        .select(
-            "url",
-            F.lit("").alias("nquads"),
-            F.expr("map()").cast("map<string,string>").alias("label_map"),
-            F.lit(0).alias("n_quads"),
-            F.lit(0).alias("n_bnodes"),
-            F.lit(0).cast("long").alias("deep_iterations"),
-            F.sha2(F.lit(""), 256).alias("quads_hash"),
-            F.lit(None).cast("string").alias("error"),
-            # input_hash over an empty row set = sha256 of the empty
-            # digest concatenation (matches input_hash_of_rows([]))
-            F.sha2(F.lit(""), 256).alias("input_hash"),
-        )
-    )
-    return canonical.unionByName(errs).unionByName(empties)
 
 
 def write_canonical_nquads(canonical_df, out_path, single_file=False):
     """Write per-document canonical N-Quads as text.
 
-    ``single_file=True`` produces one globally-ordered file (explicit
-    orderBy on url; coalesce(1) -- only for small exports)."""
-    df = canonical_df.filter(F.col("nquads").isNotNull()).select(
-        F.concat(
-            F.lit("# "), F.col("url"), F.lit("\n"), F.col("nquads")
-        ).alias("value")
-    )
+    Each document is a ``# <url>`` line followed by its canonical
+    lines.  ``single_file=True`` instead produces one globally-ordered
+    file of the bare canonical text (explicit orderBy on url;
+    coalesce(1) -- only for small exports)."""
+    df = canonical_df.filter(F.col("nquads").isNotNull())
     if single_file:
-        df = canonical_df.filter(
-            F.col("nquads").isNotNull()
-        ).orderBy("url").coalesce(1).select(F.col("nquads").alias("value"))
+        df = df.orderBy("url").coalesce(1).select(
+            F.col("nquads").alias("value")
+        )
+    else:
+        df = df.select(
+            F.concat(
+                F.lit("# "), F.col("url"), F.lit("\n"), F.col("nquads")
+            ).alias("value")
+        )
     df.write.mode("overwrite").text(out_path)

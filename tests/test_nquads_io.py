@@ -1,24 +1,35 @@
 """The W3C-style conformance fixtures, run through the SPARK file
-path: .nq files -> read_nquads -> canonize_documents -> compare
-byte-for-byte against the reference-generated goldens.  This is the
-test-plan item (a) of SURVEY.md section 5 at the engine level.
+path: .nq files -> canonize_nquads_files (one parse and one kernel
+call per file, in one ``mapInArrow`` stage) -> compare byte-for-byte
+against the reference-generated goldens.  This is the test-plan item
+(a) of SURVEY.md section 5 at the engine level.  The file path is also
+checked row-for-row against the quad-table composition
+(read_nquads -> canonize_documents), and its plan for one scan and one
+Python stage.
 """
 
 import io
 import json
 import os
+import re
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
+from rdf_canonize_spark.pipeline.canon_stage import canonize_documents
+from rdf_canonize_spark.plans import checks
 from rdf_canonize_spark.sources.nquads_io import (
     canonize_nquads_files,
     parse_errors,
+    quad_rows,
     read_nquads,
     write_canonical_nquads,
 )
 
 DIR = os.path.join(os.path.dirname(__file__), "fixtures", "rdfc10")
+W3C_DIR = os.path.join(os.path.dirname(__file__), "fixtures",
+                       "w3c_rdfc10", "rdfc10")
 
 with io.open(os.path.join(DIR, "manifest.json"), encoding="utf-8") as f:
     MANIFEST = json.load(f)
@@ -154,3 +165,79 @@ def test_spark_file_path_randomized_vs_core(spark, tmp_path):
         )
         assert got[name]["error"] is None, name
         assert got[name]["nquads"] == want, name
+
+
+def _quad_table_reference(spark, path, max_work_factor=3):
+    """The file path composed from quad-table operators: parse into the
+    quad table, canonize grouped by url, then add one row per parse
+    error and per empty file."""
+    parsed = read_nquads(spark, path)
+    canonical = canonize_documents(
+        quad_rows(parsed), max_work_factor=max_work_factor,
+        strategy="repartition",
+    )
+    errs = parse_errors(parsed).select(
+        "url",
+        F.lit(None).cast("string").alias("nquads"),
+        F.lit(None).cast("map<string,string>").alias("label_map"),
+        F.lit(None).cast("int").alias("n_quads"),
+        F.lit(None).cast("int").alias("n_bnodes"),
+        F.lit(None).cast("long").alias("deep_iterations"),
+        F.lit(None).cast("string").alias("quads_hash"),
+        "error",
+        F.lit(None).cast("string").alias("input_hash"),
+    )
+    empties = (
+        parsed.filter(F.col("error").isNull() & F.col("s_kind").isNull())
+        .select(
+            "url",
+            F.lit("").alias("nquads"),
+            F.expr("map()").cast("map<string,string>").alias("label_map"),
+            F.lit(0).alias("n_quads"),
+            F.lit(0).alias("n_bnodes"),
+            F.lit(0).cast("long").alias("deep_iterations"),
+            F.sha2(F.lit(""), 256).alias("quads_hash"),
+            F.lit(None).cast("string").alias("error"),
+            F.sha2(F.lit(""), 256).alias("input_hash"),
+        )
+    )
+    return canonical.unionByName(errs).unionByName(empties)
+
+
+def test_file_kernel_rows_equal_quad_table_path(spark, fixture_dir,
+                                                tmp_path):
+    """All nine output columns of every file -- canonical text, label
+    map, counts, deep iterations, both hashes and the exact quarantine
+    text -- equal the quad-table composition's, over the rdfc10
+    fixtures, the W3C-format inputs and whitespace-only files."""
+    blank = tmp_path / "blank"
+    blank.mkdir()
+    (blank / "spaces.nq").write_text(" \n\t\n", encoding="utf-8")
+    (blank / "newline.nq").write_text("\n", encoding="utf-8")
+    for path, n_files in ((fixture_dir + "/*.nq", 95),
+                          (W3C_DIR + "/*-in.nq", 85),
+                          (str(blank) + "/*.nq", 2)):
+        got = [r.asDict() for r in canonize_nquads_files(spark, path)
+               .collect()]
+        want = {r["url"]: r.asDict()
+                for r in _quad_table_reference(spark, path).collect()}
+        assert len(got) == len(want) == n_files, path
+        for r in got:
+            assert r == want[r["url"]], r["url"]
+    # the last set: whitespace-only files canonize to ''
+    assert all(r["nquads"] == "" and r["error"] is None for r in got)
+
+
+def test_nquads_deploy_parses_each_file_once(spark, fixture_dir):
+    """The sink's frame reads each file once and runs one Python stage:
+    one ``binaryFile`` scan, one ``MapInArrow``, and no pandas stage or
+    union of separately parsed branches."""
+    canon = canonize_nquads_files(spark, fixture_dir + "/*.nq").filter(
+        F.col("nquads").isNotNull()
+    )
+    canon.write.format("noop").mode("overwrite").save()
+    plan = checks.executed_plan(canon)
+    assert len(re.findall(r"FileScan binaryFile", plan)) == 1, plan
+    assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, plan
+    assert "MapInPandas" not in plan, plan
+    assert "Union" not in plan, plan

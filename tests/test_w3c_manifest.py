@@ -42,6 +42,9 @@ _WF = {"low": 0, "medium": 2, "high": 3}
 
 _TYPES = ("RDFC10EvalTest", "RDFC10MapTest", "RDFC10NegativeEvalTest")
 
+# the checkout this module belongs to: its subprocesses run this tree
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _jld(node, prop):
     """JSON-LD value list access, reference-identical
@@ -262,7 +265,7 @@ def test_drop_in_suite_dir_env(tmp_path):
     out = subprocess.run(
         [sys.executable, "-c", code],
         env={**os.environ, "W3C_RDFC10_TESTS_DIR": str(dst),
-             "PYTHONPATH": "/root/repo"},
+             "PYTHONPATH": ROOT},
         capture_output=True, text=True, check=True,
     )
     ids = json.loads(out.stdout.strip().splitlines()[-1])
@@ -279,7 +282,7 @@ def test_earl_report_tool(tmp_path):
     out = tmp_path / "earl.jsonld"
     proc = subprocess.run(
         [sys.executable, "tools/earl_report.py", str(out)],
-        cwd="/root/repo", env={**os.environ, "PYTHONPATH": "/root/repo"},
+        cwd=ROOT, env={**os.environ, "PYTHONPATH": ROOT},
         capture_output=True, text=True,
     )
     assert proc.returncode == 0, proc.stdout + proc.stderr
