@@ -2,7 +2,7 @@
 
 From-scratch Python implementation of the W3C RDF Dataset
 Canonicalization algorithm with the same observable behavior as the
-reference's synchronous engine (``/root/reference/lib/RDFC10Sync.js``),
+reference's synchronous engine (rdf-canonize ``lib/RDFC10Sync.js``),
 including its documented spec-deviation optimizations:
 
 * single first-degree hashing pass (no ``simple``-flag fixpoint loop,
@@ -22,6 +22,26 @@ UTF-16 code-unit order; all hash inputs are encoded like Node's utf8
 encoder (lone surrogates -> U+FFFD).  This module is pure Python with no
 Spark dependency -- it is the kernel executed per document inside the
 ``mapInArrow`` canonize stage (``pipeline.canon_stage``).
+
+The n-degree phase reuses work across its deep iterations, per
+``RDFC10`` instance (one document, one digest factory), never across
+documents:
+
+* each blank node's related list -- ``(related, quad, position)``
+  in quad order -- is gathered from its quads once, on first use;
+* related-node hashes (4.7) are memoized on what the digest receives:
+  position, predicate IRI (none for ``g``, which hashes no predicate)
+  and the related id (``_:c14nN``, ``_:bN`` or the first-degree hash).
+  A miss makes the same ``update`` calls in the same order, so a hit
+  returns what a fresh digest would, for any digest factory;
+* a one-element related group is its own only permutation, so no
+  ``Permuter`` is built for it (it never reaches the every-3rd
+  timeout/abort check either).
+
+The budget check and the deep-iteration count stay at the top of every
+``hash_n_degree_quads`` call, as in the reference.  That call itself is
+NOT memoized on (node, issuer state): an exact-key probe over the
+benchmark corpus got 0 hits in 33,733 calls.
 """
 
 from __future__ import annotations
@@ -62,7 +82,11 @@ class MessageDigest:
         self.md = hashlib.new(_HASH_ALGORITHMS[algorithm])
 
     def update(self, msg):
-        self.md.update(node_utf8(msg))
+        # strict encode first: hash inputs are almost always well-formed
+        try:
+            self.md.update(msg.encode("utf-8"))
+        except UnicodeEncodeError:
+            self.md.update(node_utf8(msg))
 
     def digest(self):
         return self.md.hexdigest()
@@ -151,6 +175,9 @@ class RDFC10:
         self.signal = signal
         self.quads = None
         self.deep_iterations_used = 0
+        # per-run memos of the n-degree phase (see module docstring)
+        self._related = {}  # bid -> [(related, quad, position)]
+        self._related_hashes = {}  # (position, predicate|None, id) -> hash
 
     # 4.4) canonicalization algorithm (lib/RDFC10Sync.js:38-194)
     def main(self, dataset):
@@ -249,18 +276,25 @@ class RDFC10:
     # Hash input framing is position ++ <predicate> ++ id with NO
     # separators; update order must match exactly.
     def hash_related_blank_node(self, related, quad, issuer, position):
-        md = self.create_message_digest()
-        md.update(position)
-        if position != "g":
-            md.update("<" + quad[1][1] + ">")
         if self.canonical_issuer.has_id(related):
             rid = "_:" + self.canonical_issuer.get_id(related)
         elif issuer.has_id(related):
             rid = "_:" + issuer.get_id(related)
         else:
             rid = self.blank_node_info[related]["hash"]
-        md.update(rid)
-        return md.digest()
+        # memoized on the exact digest inputs: a hit returns what the
+        # same update calls on a fresh digest would
+        predicate = None if position == "g" else quad[1][1]
+        key = (position, predicate, rid)
+        h = self._related_hashes.get(key)
+        if h is None:
+            md = self.create_message_digest()
+            md.update(position)
+            if predicate is not None:
+                md.update("<" + predicate + ">")
+            md.update(rid)
+            h = self._related_hashes[key] = md.digest()
+        return h
 
     # 4.8) hash n-degree quads (lib/RDFC10Sync.js:273-412)
     def hash_n_degree_quads(self, bid, issuer):
@@ -280,11 +314,14 @@ class RDFC10:
             chosen_path = ""
             chosen_issuer = None
 
-            permuter = Permuter(hash_to_related[h])
-            i = 0
-            while permuter.has_next():
-                permutation = permuter.next()
-                i += 1
+            related_list = hash_to_related[h]
+            # one element has one permutation: no Permuter needed, and
+            # the i % 3 checks below are never reached for it either
+            permutations = (
+                (related_list,) if len(related_list) == 1
+                else Permuter(related_list)
+            )
+            for i, permutation in enumerate(permutations, 1):
                 if i % 3 == 0:
                     if self.start_time is not None and (
                         time.monotonic() - self.start_time
@@ -380,16 +417,21 @@ class RDFC10:
         return _BLANK_A if component[1] == bid else _BLANK_Z
 
     def _create_hash_to_related(self, bid, issuer):
+        # bid's related blank nodes, gathered from its quads once per run
+        related_list = self._related.get(bid)
+        if related_list is None:
+            related_list = self._related[bid] = [
+                (component[1], quad, position)
+                for quad in self.blank_node_info[bid]["quads"]
+                for component, position in (
+                    (quad[0], "s"), (quad[2], "o"), (quad[3], "g")
+                )
+                if component[0] == BLANK and component[1] != bid
+            ]
         hash_to_related = {}
-        for quad in self.blank_node_info[bid]["quads"]:
-            s, p, o, g = quad
-            for component, position in ((s, "s"), (o, "o"), (g, "g")):
-                if component[0] == BLANK and component[1] != bid:
-                    related = component[1]
-                    h = self.hash_related_blank_node(
-                        related, quad, issuer, position
-                    )
-                    hash_to_related.setdefault(h, []).append(related)
+        for related, quad, position in related_list:
+            h = self.hash_related_blank_node(related, quad, issuer, position)
+            hash_to_related.setdefault(h, []).append(related)
         return hash_to_related
 
     def _canonical_component(self, component):

@@ -7,6 +7,10 @@ the input list collapse and yield fewer permutations -- which matters for
 deep-iteration-budget fidelity (each permutation processed can trigger
 budget-counted recursions in hash-n-degree).  The input list is sorted
 in place first (``lib/Permuter.js:15``), using UTF-16 code-unit order.
+
+Each element's UTF-16 sort key is computed once, in ``__init__``.
+Iterating a ``Permuter`` yields the same sequence as the
+``has_next``/``next`` loop.
 """
 
 from __future__ import annotations
@@ -15,10 +19,13 @@ from .terms import utf16_sort_key
 
 
 class Permuter:
-    __slots__ = ("current", "done", "direction")
+    __slots__ = ("current", "done", "direction", "key")
 
     def __init__(self, lst):
-        lst.sort(key=utf16_sort_key)
+        # JS string compare == UTF-16 code-unit order; related ids are
+        # ASCII in practice, but the key keeps that exact for any label
+        self.key = {e: utf16_sort_key(e) for e in lst}
+        lst.sort(key=self.key.__getitem__)
         self.current = lst
         self.done = False
         # direction keyed by element VALUE (duplicates share an entry),
@@ -28,13 +35,15 @@ class Permuter:
     def has_next(self):
         return not self.done
 
+    def __iter__(self):
+        while not self.done:
+            yield self.next()
+
     def next(self):
-        current, direction = self.current, self.direction
+        current, direction, key = self.current, self.direction, self.key
         rval = list(current)
 
-        # find largest mobile element k (JS string > = UTF-16 order; ids
-        # here are always ASCII so plain compare would match, but use the
-        # same key for safety)
+        # find largest mobile element k
         k = None
         k_key = None
         pos = 0
@@ -42,12 +51,11 @@ class Permuter:
         for i in range(length):
             element = current[i]
             left = direction[element]
-            e_key = utf16_sort_key(element)
+            e_key = key[element]
             if (k is None or e_key > k_key) and (
-                (left and i > 0
-                 and e_key > utf16_sort_key(current[i - 1]))
+                (left and i > 0 and e_key > key[current[i - 1]])
                 or (not left and i < length - 1
-                    and e_key > utf16_sort_key(current[i + 1]))
+                    and e_key > key[current[i + 1]])
             ):
                 k = element
                 k_key = e_key
@@ -59,6 +67,6 @@ class Permuter:
             current[pos] = current[swap]
             current[swap] = k
             for element in current:
-                if utf16_sort_key(element) > k_key:
+                if key[element] > k_key:
                     direction[element] = not direction[element]
         return rval
