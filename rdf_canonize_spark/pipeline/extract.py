@@ -1,16 +1,16 @@
 """Vectorized triple extraction from page text.
 
-Two interchangeable engines (tested equal):
+Two detectors over the same statement pattern (tested equal):
 
 * ``extract_mentions`` -- pure Catalyst: ``regexp_extract_all`` +
-  ``explode`` + ``split``.  Whole-stage-codegen JVM path; the default.
-  This is the right engine whenever the mention pattern is regular --
-  never burn Python cycles on what the JVM does vectorized.
-* ``extract_mentions_arrow`` -- Arrow-batched ``pandas_udf`` doing the
-  same detection over ``pd.Series``.  The extension point for
-  non-regular detectors (gazetteer tries, ML scorers) mandated by the
-  north rule ("batched mention detection ... vectorized Arrow UDFs");
-  no per-row Python either way.
+  ``explode`` + ``split``.  Whole-stage-codegen JVM path, and the one
+  the pipeline runs: ``link.build_quads`` inlines the same regexp into
+  its single projection, and ``entity_sharded_link`` calls this
+  function.  Never burn Python cycles on what the JVM does vectorized.
+* ``extract_mentions_arrow`` -- the scalar ``pandas_udf`` doing the
+  same detection over ``pd.Series``, one regex pass per Arrow batch.
+  It is the Arrow-batched mention detection of the north rule, tested
+  equal to the Catalyst detector; it is not a pipeline hook.
 
 Output schema (mentions): ``url, s_surface, relation, o_surface, stmt_idx``.
 """

@@ -37,11 +37,10 @@ so its plan is audited in PLANS.md):
 3. carried  = prior LEFT SEMI unchanged_urls (url-keyed sort-merge --
    both sides are corpus-sized on a real recrawl, no broadcast).
    fresh = kernel over quads LEFT SEMI changed_urls; the changed set
-   is a small fraction of a recrawl by definition, so it broadcasts
-   (``broadcast_changed=False`` degrades gracefully to a shuffle
-   semi-join when a crawl replaces most of the corpus).  Either way
-   the semi-join output is co-located by url, which is exactly the
-   canonize kernel's input contract -- fresh costs no extra exchange.
+   is a small fraction of a recrawl by definition, so it is always
+   broadcast.  The semi-join output keeps the quads' url co-location,
+   which is exactly the canonize kernel's input contract -- fresh costs
+   no extra exchange.
 """
 
 from __future__ import annotations
@@ -66,16 +65,12 @@ def input_quads_hash(quads_df):
     )
 
 
-def incremental_canonize(quads_df, prior_df, broadcast_changed=True,
-                         **kwargs):
+def incremental_canonize(quads_df, prior_df, **kwargs):
     """Canonical output for the new crawl, recomputing only documents
     whose input quads changed since ``prior_df`` (a previous
     ``canonize_documents`` output, which carries ``input_hash``).
-    Adds ``recomputed: boolean``.
-
-    ``broadcast_changed``: broadcast the changed-url set into the
-    fresh-path semi-join (right for a recrawl, where changed is a
-    small fraction); set False when most of the corpus changed.
+    Adds ``recomputed: boolean``.  The changed-url set is broadcast
+    into the fresh-path semi-join (a recrawl changes a small fraction).
     """
     hashes = input_quads_hash(quads_df)
     prior_slim = prior_df.select(
@@ -87,12 +82,10 @@ def incremental_canonize(quads_df, prior_df, broadcast_changed=True,
     unchanged_urls = status.filter(
         F.col("prior_hash") == F.col("input_hash")
     ).select("url")
-    changed_urls = status.filter(
+    changed_urls = F.broadcast(status.filter(
         F.col("prior_hash").isNull()
         | (F.col("prior_hash") != F.col("input_hash"))
-    ).select("url")
-    if broadcast_changed:
-        changed_urls = F.broadcast(changed_urls)
+    ).select("url"))
 
     carried = prior_df.join(unchanged_urls, "url", "left_semi") \
         .withColumn("recomputed", F.lit(False))

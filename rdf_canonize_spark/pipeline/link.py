@@ -63,69 +63,17 @@ def link_mentions(mentions_df, gaz_df):
     return out
 
 
-def assemble_quads(linked_df):
-    """Mentions -> quad rows (statement quads + one title literal/page).
-
-    All expressions are Catalyst built-ins; the relation->IRI map is a
-    literal map lookup, not a join.
-    """
-    rel_map = F.create_map(
-        *[x for r in RELATIONS for x in (F.lit(r), F.lit(predicate_iri(r)))]
-    )
-    stmt_quads = linked_df.select(
-        "url",
-        F.when(F.col("s_iri").isNotNull(), F.lit(NAMED))
-        .otherwise(F.lit(BLANK))
-        .alias("s_kind"),
-        F.coalesce("s_iri", "s_surface").alias("s"),
-        rel_map[F.col("relation")].alias("p"),
-        F.when(F.col("o_iri").isNotNull(), F.lit(NAMED))
-        .otherwise(F.lit(BLANK))
-        .alias("o_kind"),
-        F.coalesce("o_iri", "o_surface").alias("o"),
-        F.lit(None).cast("string").alias("o_datatype"),
-        F.lit(None).cast("string").alias("o_lang"),
-        F.lit(DEFAULT_GRAPH).alias("g_kind"),
-        F.lit("").alias("g"),
-    )
-    return stmt_quads
-
-
-def page_title_quads(pages_df):
-    """One literal quad per page: <page-iri> <rel/title> "Page k"@en ."""
-    return pages_df.select(
-        "url",
-        F.lit(NAMED).alias("s_kind"),
-        F.col("url").alias("s"),
-        F.lit(PRED_NS + "title").alias("p"),
-        F.lit(LITERAL).alias("o_kind"),
-        F.concat(F.lit("Page "), F.substring("url", -12, 12)).alias("o"),
-        F.lit("http://www.w3.org/1999/02/22-rdf-syntax-ns#langString")
-        .alias("o_datatype"),
-        F.lit("en").alias("o_lang"),
-        F.lit(DEFAULT_GRAPH).alias("g_kind"),
-        F.lit("").alias("g"),
-    )
-
-
-def build_quads(pages_df, gaz_df, extract_fn=None, colocated=True):
+def build_quads(pages_df, gaz_df):
     """pages -> quads: extraction + linking + assembly + title quads.
 
-    With ``colocated=True`` (default) statement and title quads are
-    produced from ONE projection of the pages scan, so every url's quads
-    live in the same partition with no shuffle: the explode is narrow and
-    the gazetteer joins are broadcasts.  The canonize stage can then use
-    its zero-shuffle strategy.  ``colocated=False`` keeps the two-branch
-    union (used to test the generic repartition path).
+    Statement and title quads come from ONE projection of the pages
+    scan, so every url's quads live in the same partition with no
+    shuffle: the explode is narrow and the gazetteer joins are
+    broadcasts.  The canonize stage can then use its zero-shuffle
+    strategy.  The statements are detected with the same Catalyst
+    regexp as ``extract.extract_mentions``, plus one title marker row
+    per page.
     """
-    from .extract import extract_mentions
-
-    extract_fn = extract_fn or extract_mentions
-    if not colocated:
-        mentions = extract_fn(pages_df)
-        linked = link_mentions(mentions, gaz_df)
-        return assemble_quads(linked).unionByName(page_title_quads(pages_df))
-
     from .extract import STATEMENT_PATTERN
 
     # one row-set: exploded statements plus a title marker row per page

@@ -1,7 +1,7 @@
 """Graph materialization, lineage/metrics, checkpoint resumability.
 
-Outputs (parquet in the sandbox; format='iceberg' on a real cluster --
-the writer takes a ``fmt`` argument so the swap is one string):
+Outputs (parquet; an Iceberg deployment swaps ``write_batch``'s body,
+see its docstring):
 
 * ``canonical_nquads(url, nquads, label_map, ...)`` -- per-document
   canonical form (the flagship output).
@@ -18,7 +18,9 @@ rename) into ``<out>/canonical_nquads/batch=<id>/``; those committed
 directories are the completion record, and ``resume_filter`` anti-joins
 pages against their url column so a restarted job only processes the
 remainder.  (Batch-level resumability, not Structured Streaming -- the
-reference pipeline is strictly batch, SURVEY.md section 2.2.)
+reference pipeline is strictly batch, SURVEY.md section 2.2; the
+streaming ingest commits each micro-batch through the same
+``write_batch``.)
 """
 
 from __future__ import annotations
@@ -166,7 +168,7 @@ def resume_filter(spark, pages_df, out_dir):
     return pages_df.join(done, "url", "left_anti")
 
 
-def write_batch(canonical_df, out_dir, batch_id, fmt="parquet"):
+def write_batch(canonical_df, out_dir, batch_id):
     """Stage-then-commit batch write in one Spark job; returns the
     written ``{"docs", "quads", "errors"}`` counts.
 
@@ -186,8 +188,8 @@ def write_batch(canonical_df, out_dir, batch_id, fmt="parquet"):
     completion record ``resume_filter`` reads: reusing a batch id
     replaces its urls, and the replaced ones become todo again.
 
-    Format note: the stage/rename dance is for PATH-based formats
-    (parquet/orc on a filesystem or rename-capable object store).  An
+    Format note: the stage/rename dance is for a PATH-based format
+    (parquet on a filesystem or rename-capable object store).  An
     Iceberg deployment gets atomic replacement from the table format's
     own snapshot commit -- swap this function's body for a plain
     ``writeTo(table).overwritePartitions()`` on the same observed
@@ -204,7 +206,7 @@ def write_batch(canonical_df, out_dir, batch_id, fmt="parquet"):
         F.count(F.col("error")).alias("errors"),
     )
     staging = os.path.join(out_dir, "_staging", f"batch={batch_id}")
-    observed.write.mode("overwrite").format(fmt).save(staging)
+    observed.write.mode("overwrite").parquet(staging)
     written = obs.get
     fs, staging_p = _fs_for(spark, staging)
     if written["docs"] == 0:

@@ -35,15 +35,17 @@ _EPOCH = 1767225600
 _LANGS = "array('en', 'de', 'fr', 'es')"
 
 
-# upper bound of the per-page statement loop; heavy generator overrides
+# upper bound of the per-page statement loop (m - 1), over the key {k}
 _STATEMENTS_M_EXPR = "cast(pmod({k}, 5) as int)"
+_HEAVY_STATEMENTS_M_EXPR = "15 + cast(pmod({k}, 8) as int)"
 
 
-def _statements_sql(k="k"):
-    """Spark SQL expression producing the concatenated statement text."""
+def _statements_sql(k, m_expr):
+    """Spark SQL expression producing the concatenated statement text;
+    ``m_expr`` is a statement-count template over ``{k}``."""
     surf = sql_array_surfaces()
     rel = sql_array_relations()
-    m_expr = _STATEMENTS_M_EXPR.format(k=k)
+    m_expr = m_expr.format(k=k)
     return f"""
       array_join(
         transform(
@@ -63,9 +65,9 @@ def _statements_sql(k="k"):
     """
 
 
-def _with_page_columns(df, k_col, base_text_col, lang_expr):
+def _with_page_columns(df, k_col, base_text_col, lang_expr, m_expr):
     """Project the input_hint page schema from a key + base text."""
-    stmts = _statements_sql(k_col)
+    stmts = _statements_sql(k_col, m_expr)
     return df.select(
         F.expr(
             f"concat('https://crawl.example.org/p/', "
@@ -89,45 +91,36 @@ def _with_page_columns(df, k_col, base_text_col, lang_expr):
     )
 
 
+def _synthesize(spark, n_docs, partitions, m_expr):
+    df = spark.range(
+        0, n_docs, 1,
+        partitions or spark.sparkContext.defaultParallelism,
+    ).withColumnRenamed("id", "k")
+    return _with_page_columns(
+        df,
+        "k",
+        "concat('Synthetic crawl body for page ', cast(k as string), '.')",
+        f"element_at({_LANGS}, cast(pmod(k, 4) as int) + 1)",
+        m_expr,
+    )
+
+
 def synthesize_pages(spark, n_docs, partitions=None):
     """Pure-generator pages table: ``spark.range`` -> page columns.
 
     Scales to any row count without driver-side loops; used by the
     benchmark and the flagship entry query.
     """
-    rng = spark.range(0, n_docs, 1, partitions or spark.sparkContext.defaultParallelism)
-    df = rng.withColumnRenamed("id", "k")
-    return _with_page_columns(
-        df,
-        "k",
-        "concat('Synthetic crawl body for page ', cast(k as string), '.')",
-        f"element_at({_LANGS}, cast(pmod(k, 4) as int) + 1)",
-    )
+    return _synthesize(spark, n_docs, partitions, _STATEMENTS_M_EXPR)
 
 
 def synthesize_heavy_pages(spark, n_docs, partitions=None):
-    """Benchmark corpus: like ``synthesize_pages`` but 17-24 statements
-    per page (m = 16 + k % 8), approximating content-dense pages.  Used
-    for throughput/scaling runs where per-document canonicalization
-    work should dominate transport; NOT oracle-checked (the oracle
-    formula pins m = 1 + k % 5)."""
-    rng = spark.range(
-        0, n_docs, 1,
-        partitions or spark.sparkContext.defaultParallelism,
-    )
-    df = rng.withColumnRenamed("id", "k")
-    global _STATEMENTS_M_EXPR
-    saved = _STATEMENTS_M_EXPR
-    try:
-        _STATEMENTS_M_EXPR = "15 + cast(pmod({k}, 8) as int)"
-        return _with_page_columns(
-            df,
-            "k",
-            "concat('Synthetic crawl body for page ', cast(k as string), '.')",
-            f"element_at({_LANGS}, cast(pmod(k, 4) as int) + 1)",
-        )
-    finally:
-        _STATEMENTS_M_EXPR = saved
+    """Benchmark corpus: like ``synthesize_pages`` but 16-23 statements
+    per page (m = 16 + k % 8) plus the title, approximating
+    content-dense pages.  Used for throughput/scaling runs where
+    per-document canonicalization work should dominate transport; NOT
+    oracle-checked (the oracle formula pins m = 1 + k % 5)."""
+    return _synthesize(spark, n_docs, partitions, _HEAVY_STATEMENTS_M_EXPR)
 
 
 def pages_from_documents(spark, sf_dir, min_parallelism=None):
@@ -160,4 +153,6 @@ def pages_from_documents(spark, sf_dir, min_parallelism=None):
         F.col("text").alias("base_text"),
         F.col("lang").alias("doc_lang"),
     )
-    return _with_page_columns(df, "k", "base_text", "doc_lang")
+    return _with_page_columns(
+        df, "k", "base_text", "doc_lang", _STATEMENTS_M_EXPR
+    )

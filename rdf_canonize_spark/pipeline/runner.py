@@ -1,7 +1,8 @@
 """End-to-end KG-construction pipeline driver.
 
-pages -> [extract: Catalyst regexp] -> mentions
-      -> [link: broadcast join against a LocalTableScan gazetteer] -> quads
+pages -> [extract + link: one projection of the pages scan -- Catalyst
+          regexp, broadcast join against a LocalTableScan gazetteer]
+      -> quads
       -> [canonize: sortWithinPartitions(url).mapInArrow(RDFC-1.0)]
       -> canonical
       -> [materialize: checkpointed write of canonical_nquads]
@@ -10,7 +11,9 @@ Control crosses the JVM<->Python boundary exactly once (the canonize
 Arrow kernel; asserted on the executed plan in
 tests/test_plans_and_streaming.py); everything else is
 whole-stage-codegen relational.  Edges/nodes/lineage/metrics are built
-on request with the ``materialize`` functions, not per deploy.
+on request with the ``materialize`` functions, not per deploy.  The
+streaming ingest (``streaming/ingest.py``) runs this same function on
+each micro-batch and commits through the same ``write_batch``.
 """
 
 from __future__ import annotations
@@ -26,7 +29,6 @@ def run_pipeline(
     max_work_factor=3,
     out_dir=None,
     batch_id=0,
-    extract_fn=None,
 ):
     """Run the full pipeline; returns ``{"quads", "canonical"}``, the
     lazy quad-table and canonical-output DataFrames.
@@ -40,7 +42,7 @@ def run_pipeline(
     gaz = gazetteer_df(spark)
     if out_dir:
         pages_df = resume_filter(spark, pages_df, out_dir)
-    quads = build_quads(pages_df, gaz, extract_fn=extract_fn)
+    quads = build_quads(pages_df, gaz)
     canonical = canonize_documents(quads, max_work_factor=max_work_factor)
     results = {"quads": quads, "canonical": canonical}
     if out_dir:

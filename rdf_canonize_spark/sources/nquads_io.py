@@ -210,22 +210,15 @@ def canonize_nquads_files(spark, path, max_work_factor=3):
     )
 
 
-def write_canonical_nquads(canonical_df, out_path, single_file=False):
+def write_canonical_nquads(canonical_df, out_path):
     """Write per-document canonical N-Quads as text.
 
     Each document is a ``# <url>`` line followed by its canonical
-    lines.  ``single_file=True`` instead produces one globally-ordered
-    file of the bare canonical text (explicit orderBy on url;
-    coalesce(1) -- only for small exports)."""
-    df = canonical_df.filter(F.col("nquads").isNotNull())
-    if single_file:
-        df = df.orderBy("url").coalesce(1).select(
-            F.col("nquads").alias("value")
-        )
-    else:
-        df = df.select(
-            F.concat(
-                F.lit("# "), F.col("url"), F.lit("\n"), F.col("nquads")
-            ).alias("value")
-        )
+    lines; quarantined documents (null ``nquads``) are skipped.  The
+    output is one text file per partition, in no global order."""
+    df = canonical_df.filter(F.col("nquads").isNotNull()).select(
+        F.concat(
+            F.lit("# "), F.col("url"), F.lit("\n"), F.col("nquads")
+        ).alias("value")
+    )
     df.write.mode("overwrite").text(out_path)

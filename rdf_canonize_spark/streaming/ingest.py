@@ -3,9 +3,11 @@
 The reference is strictly batch (SURVEY.md section 2.2) and the north
 rule's resumability reads the committed batch directories, but a crawl
 is naturally a stream: this module runs the SAME pipeline incrementally --
-``readStream`` over a pages directory, the per-batch transformation is
-``run_pipeline``'s stages applied inside ``foreachBatch``, and Spark's
-streaming checkpoint gives exactly-once per-batch file output.
+``readStream`` over a pages directory, each micro-batch is
+``run_pipeline`` inside ``foreachBatch``, committed by the batch
+deploy's ``write_batch`` into ``canonical_nquads/batch=<id>``; the
+replay-safe rename plus Spark's streaming checkpoint give exactly-once
+per-batch output.
 
 ``foreachBatch`` (not a continuous sink) because the canonize stage is
 a grouped-map transform over a bounded batch -- each micro-batch is a
@@ -19,14 +21,15 @@ from __future__ import annotations
 import os
 
 
-def stream_pages(spark, in_dir, schema=None):
+PAGES_SCHEMA = (
+    "url string, warc_ts timestamp, html binary, text string, lang string"
+)
+
+
+def stream_pages(spark, in_dir):
     """File-source stream of pages (one micro-batch per trigger)."""
-    schema = schema or (
-        "url string, warc_ts timestamp, html binary, "
-        "text string, lang string"
-    )
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(PAGES_SCHEMA)
         .option("maxFilesPerTrigger", 4)
         .parquet(in_dir)
     )
@@ -71,82 +74,40 @@ def start_crawl_rate_stream(spark, in_dir, out_dir, window="10 minutes",
     )
 
 
-def _check_sink_layout(spark, out_dir):
-    """Refuse a sink root written by the PRE-partitioned sink.  The
-    current sink writes ``canonical_nquads_stream/batch_id=<id>/``
-    partition dirs; an earlier version appended flat part files at the
-    root.  Restarting over such a root would mix root-level data files
-    with partition subdirectories, which Spark's partition discovery
-    rejects ("conflicting directory structures") -- breaking reads of
-    previously valid output.  Detecting it up front turns a confusing
-    mid-read failure into an actionable error: point the stream at a
-    fresh root, or move the legacy files into a ``batch_id=-1/``
-    subdirectory to adopt them."""
-    from ..pipeline.materialize import _fs_for
-
-    sink = os.path.join(out_dir, "canonical_nquads_stream")
-    fs, sink_p = _fs_for(spark, sink)
-    if not fs.exists(sink_p):
-        return
-    for st in fs.listStatus(sink_p):
-        name = st.getPath().getName()
-        if st.isFile() and not name.startswith(("_", ".")):
-            raise ValueError(
-                f"legacy flat-append sink layout at {sink}: root-level "
-                f"data file {name!r} would conflict with the "
-                "batch_id=<id> partition layout on read. Use a new "
-                "output root, or move legacy files into a "
-                "batch_id=-1/ subdirectory."
-            )
-
-
 def start_canonize_stream(spark, in_dir, out_dir, max_work_factor=3,
                           fault_injector=None):
     """pages stream -> canonical N-Quads parquet, exactly-once.
 
-    ``foreachBatch`` is at-least-once per batch: a crash after the
-    data write but before the streaming checkpoint commits replays the
-    whole batch on restart, so a naive ``mode('append')`` sink
-    double-writes exactly the batch that died.  Each batch therefore
-    writes with ``mode('overwrite')`` into its OWN partition directory
-    ``canonical_nquads_stream/batch_id=<id>`` -- the standard
-    idempotent-foreachBatch recipe: the replayed batch (same batch_id,
-    same source offsets, hence same documents) overwrites its partial
-    predecessor instead of appending beside it.  Readers load the root
-    and see ``batch_id`` as a partition column.
+    Each micro-batch is one ``run_pipeline`` deploy committed by
+    ``write_batch`` into ``<out>/canonical_nquads/batch=<id>`` -- the
+    same stage-then-rename commit and layout as a batch deploy, so
+    ``resume_filter`` and whole-table reads see streamed and batch
+    output alike.  ``foreachBatch`` is at-least-once per batch: a crash
+    after the commit but before the streaming checkpoint commits
+    replays the batch on restart with the same batch id and the same
+    source offsets, hence the same documents, and its rename replaces
+    the directory the crashed attempt committed instead of appending
+    beside it.  The pages are not resume-filtered: a url crawled again
+    in a later micro-batch is canonized again, into that batch.
 
     ``fault_injector``: test hook called with ``batch_id`` AFTER the
-    batch's write and BEFORE the checkpoint commit -- raising inside
-    it simulates a crash in precisely the window the idempotent write
-    exists for (tests/test_plans_and_streaming.py kills batch 1 and
-    asserts the restart produces exactly-once output).
+    batch's commit and BEFORE the checkpoint commit -- raising inside
+    it simulates a crash in precisely that window
+    (tests/test_plans_and_streaming.py kills batch 1 and asserts the
+    restart produces exactly-once output).
     """
-    from ..pipeline.canon_stage import canonize_documents
-    from ..pipeline.link import build_quads, gazetteer_df
-
-    _check_sink_layout(spark, out_dir)
-    gaz = gazetteer_df(spark)
-    pages = stream_pages(spark, in_dir)
+    from ..pipeline.materialize import write_batch
+    from ..pipeline.runner import run_pipeline
 
     def process_batch(batch_df, batch_id):
-        quads = build_quads(batch_df, gaz)
-        canonical = canonize_documents(
-            quads, max_work_factor=max_work_factor
-        )
-        (
-            canonical.write.mode("overwrite")
-            .parquet(
-                os.path.join(
-                    out_dir, "canonical_nquads_stream",
-                    f"batch_id={batch_id}",
-                )
-            )
-        )
+        canonical = run_pipeline(spark, batch_df, max_work_factor)["canonical"]
+        write_batch(canonical, out_dir, batch_id)
         if fault_injector is not None:
             fault_injector(batch_id)
 
     return (
-        pages.writeStream.foreachBatch(process_batch)
+        stream_pages(spark, in_dir)
+        .writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
         .trigger(availableNow=True)
         .start()

@@ -121,11 +121,13 @@ def test_roundtrip_write_read(spark, fixture_dir, tmp_path):
     canonical = canonize_nquads_files(
         spark, fixture_dir + "/chain-in.nq", max_work_factor=3
     )
-    write_canonical_nquads(canonical, out, single_file=True)
+    write_canonical_nquads(canonical, out)
     txt = "\n".join(
         r["value"] for r in spark.read.text(out).collect()
     )
     assert "_:c14n0 <urn:p0> _:c14n1 ." in txt
+    header = txt.splitlines()[0]
+    assert header.startswith("# ") and header.endswith("/chain-in.nq")
 
 def test_spark_file_path_randomized_vs_core(spark, tmp_path):
     """Randomized differential: arbitrary generated graphs through the

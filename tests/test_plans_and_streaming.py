@@ -124,7 +124,7 @@ def test_streaming_canonize_exactly_once(spark, tmp_path):
     q = start_canonize_stream(spark, in_dir, out_dir)
     q.awaitTermination(timeout=300)
 
-    got = spark.read.parquet(f"{out_dir}/canonical_nquads_stream")
+    got = spark.read.parquet(f"{out_dir}/canonical_nquads")
     assert got.select("url").distinct().count() == 40
     assert got.count() == 40  # exactly-once: no duplicate urls
     assert got.filter("error is not null").count() == 0
@@ -133,38 +133,8 @@ def test_streaming_canonize_exactly_once(spark, tmp_path):
     q2 = start_canonize_stream(spark, in_dir, out_dir)
     q2.awaitTermination(timeout=300)
     assert spark.read.parquet(
-        f"{out_dir}/canonical_nquads_stream"
+        f"{out_dir}/canonical_nquads"
     ).count() == 40
-
-
-def test_streaming_canonize_legacy_flat_sink_refused(spark, tmp_path):
-    """A sink root written by the old flat-append layout (root-level
-    part files) must be refused up front with an actionable error --
-    partition discovery over mixed flat files + batch_id=<id> dirs
-    fails confusingly mid-read otherwise.  Underscore/dot files
-    (_SUCCESS, checkpoints) and a correctly-partitioned root are
-    fine."""
-    import pytest
-
-    from rdf_canonize_spark.streaming.ingest import start_canonize_stream
-
-    in_dir = str(tmp_path / "pages_in")
-    out_dir = str(tmp_path / "legacy_out")
-    synthesize_pages(spark, 5).write.parquet(in_dir)
-    sink = f"{out_dir}/canonical_nquads_stream"
-    # simulate the legacy flat sink: data files directly at the root
-    synthesize_pages(spark, 3).coalesce(1).write.parquet(sink)
-    with pytest.raises(ValueError, match="legacy flat-append"):
-        start_canonize_stream(spark, in_dir, out_dir)
-    # marker files alone do not trip the guard
-    import os
-
-    for name in os.listdir(sink):
-        if not name.startswith(("_", ".")):
-            os.remove(os.path.join(sink, name))
-    q = start_canonize_stream(spark, in_dir, out_dir)
-    q.awaitTermination(timeout=300)
-    assert spark.read.parquet(sink).count() == 5
 
 
 def test_streaming_canonize_crash_replay_exactly_once(spark, tmp_path):
@@ -172,7 +142,8 @@ def test_streaming_canonize_crash_replay_exactly_once(spark, tmp_path):
     data write but BEFORE its checkpoint commit -- exactly the window
     where an append sink would double-write that batch on replay --
     then restart from the same checkpoint and assert exactly-once
-    output (the idempotent per-batch overwrite absorbs the replay)."""
+    output (the replayed batch's commit renames over the directory the
+    crashed attempt committed)."""
     import pytest
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
@@ -197,15 +168,51 @@ def test_streaming_canonize_crash_replay_exactly_once(spark, tmp_path):
     assert fired, "injector never fired -- stream ran as one batch?"
     # the killed batch's data IS on disk (that's the hazard being
     # tested) while its checkpoint commit is not
-    partial = spark.read.parquet(f"{out_dir}/canonical_nquads_stream")
+    partial = spark.read.parquet(f"{out_dir}/canonical_nquads")
     assert partial.count() > 0
 
     q2 = start_canonize_stream(spark, in_dir, out_dir)
     q2.awaitTermination(timeout=300)
-    got = spark.read.parquet(f"{out_dir}/canonical_nquads_stream")
+    got = spark.read.parquet(f"{out_dir}/canonical_nquads")
     assert got.count() == 40
     assert got.select("url").distinct().count() == 40
     assert got.filter("error is not null").count() == 0
+
+
+def test_streaming_canonize_equals_batch_deploy(spark, tmp_path):
+    """The stream commits like a batch deploy: every micro-batch is a
+    ``write_batch`` commit under ``canonical_nquads/batch=<id>``, each
+    url's canonical N-Quads equal a batch ``run_pipeline`` of the same
+    pages, and the committed stream output is a resume record that
+    ``resume_filter`` honours."""
+    import os
+
+    from rdf_canonize_spark.pipeline.materialize import resume_filter
+    from rdf_canonize_spark.pipeline.runner import run_pipeline
+    from rdf_canonize_spark.streaming.ingest import start_canonize_stream
+
+    in_dir = str(tmp_path / "pages_in")
+    out_dir = str(tmp_path / "stream_out")
+    synthesize_pages(spark, 40).repartition(8).write.parquet(in_dir)
+    pages = spark.read.parquet(in_dir)
+
+    q = start_canonize_stream(spark, in_dir, out_dir)
+    q.awaitTermination(timeout=300)
+
+    root = f"{out_dir}/canonical_nquads"
+    got = spark.read.parquet(root)
+    batches = {r["batch"] for r in got.select("batch").distinct().collect()}
+    assert len(batches) > 1, "stream ran as one micro-batch"
+    assert sorted(os.listdir(root)) == sorted(f"batch={b}" for b in batches)
+
+    streamed = {r["url"]: r["nquads"] for r in got.collect()}
+    batch = {
+        r["url"]: r["nquads"]
+        for r in run_pipeline(spark, pages)["canonical"].collect()
+    }
+    assert len(streamed) == got.count() == 40
+    assert streamed == batch
+    assert resume_filter(spark, pages, out_dir).count() == 0
 
 
 def test_streaming_watermark_windowed_agg(spark, tmp_path):
