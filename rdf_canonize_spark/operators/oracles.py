@@ -373,10 +373,11 @@ FROM rlines GROUP BY url"""
 _QUAD_COLS = ["s_kind", "s", "p", "o_kind", "o",
               "o_datatype", "o_lang", "g_kind", "g"]
 
-# Byte-exact mirror of canon_stage.input_hash_of_rows /
-# incremental.input_quads_hash: length-prefixed fields (strlen = BYTE
-# length, matching Spark octet_length / Python len(utf-8)), chr(31)
-# joins, per-row sha256 hex, order-independent distinct-digest rollup.
+# Byte-exact mirror of functions/framing.ROW_DIGEST and its Python
+# twin canon_stage.input_hash_of_rows: length-prefixed fields (strlen =
+# BYTE length, matching Spark octet_length / Python len(utf-8)),
+# chr(31) joins, per-row sha256 hex, order-independent distinct-digest
+# rollup.
 _FRAMED_LINE = (" || chr(31) || ").join(
     f"(CASE WHEN {c} IS NULL THEN chr(0) "
     f"ELSE CAST(strlen(CAST({c} AS VARCHAR)) AS VARCHAR) || ':' "

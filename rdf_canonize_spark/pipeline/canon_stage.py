@@ -5,10 +5,16 @@ each document's RDF dataset canonicalizes independently and
 partition-parallel.  This is the one stage that genuinely cannot be
 expressed in DataFrame algebra: hash-n-degree-quads is sequential,
 stateful, recursive, and data-dependent (see SURVEY.md O9), exactly
-what a Python UDF is for.  Everything around it stays in Catalyst.
-The ``.nq`` file source (``sources/nquads_io``) runs the same
-per-document kernel and ``flush`` straight from its file rows, since
-a file row is already a whole document.
+what a Python UDF is for.  Everything around it stays in Catalyst,
+including each row's input-hash digest (``framing.ROW_DIGEST``,
+projected next to the quad columns): the kernel only rolls a
+document's digests up into its ``input_hash``.  Arrow columns become
+Python values through numpy (``column_values``), not per-cell
+``to_pylist``.  The ``.nq`` file source (``sources/nquads_io``) runs
+the same per-document kernel and ``flush`` straight from its file
+rows, since a file row is already a whole document; it frames the
+input hash in Python (``input_hash_of_rows``), because its rows never
+exist in Catalyst.
 
 Scale properties:
 
@@ -42,6 +48,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.framing import QUAD_COLS, ROW_DIGEST
 from ..rdfc.canonize import RDFC10
 from ..rdfc.terms import BLANK, DEFAULT_GRAPH, LITERAL, XSD_STRING
 
@@ -59,8 +66,12 @@ CANONICAL_SCHEMA = StructType(
     ]
 )
 
-# Framing for the order-independent input-content hash (shared contract
-# with pipeline/incremental.input_quads_hash and the DuckDB oracle):
+# Python mirror of the order-independent input-content hash
+# (functions/framing.py holds the Catalyst definition, shared with
+# pipeline/incremental.input_quads_hash; the DuckDB oracle mirrors it
+# too).  The quad-table kernel receives the per-row digests from
+# Catalyst; this framing serves the .nq file kernel, which parses its
+# rows in Python, and pure-Python callers:
 # each field is byte-length-prefixed ("<len>:<value>", null -> chr(0)),
 # fields joined with chr(31); the line digests are SHA-256 hex, and the
 # document hash is SHA-256 over the sorted distinct digests.  Length
@@ -106,10 +117,18 @@ def _jvm_text(s):
         )
 
 
+def input_hash_of_digests(digests):
+    """Order-independent rollup of a document's per-row SHA-256 hex
+    digests: duplicates collapse, the fixed-width digests sort and
+    their concatenation is hashed once more."""
+    return hashlib.sha256("".join(sorted(set(digests))).encode()).hexdigest()
+
+
 def input_hash_of_rows(rows):
     """Order-independent content hash of a document's raw quad rows
-    (pre-dedup; duplicate rows collapse at digest level)."""
-    digests = set()
+    (pre-dedup; duplicate rows collapse at digest level), framed in
+    Python exactly as ``framing.ROW_DIGEST`` frames them in Catalyst."""
+    digests = []
     for row in rows:
         parts = []
         for v in row:
@@ -118,10 +137,10 @@ def input_hash_of_rows(rows):
             else:
                 s = _jvm_text(str(v))
                 parts.append("%d:%s" % (len(s.encode("utf-8")), s))
-        digests.add(
+        digests.append(
             hashlib.sha256(_SEP.join(parts).encode("utf-8")).hexdigest()
         )
-    return hashlib.sha256("".join(sorted(digests)).encode()).hexdigest()
+    return input_hash_of_digests(digests)
 
 
 def rows_to_dataset(rows):
@@ -153,8 +172,15 @@ OVERSIZED_PREFIX = "Document exceeds maximum quad count"
 
 def _canonize_rows_for_url(url, rows, max_work_factor, doc_timeout_ms=0,
                            max_doc_quads=0,
-                           message_digest_algorithm="sha256"):
-    input_hash = input_hash_of_rows(rows)
+                           message_digest_algorithm="sha256", *,
+                           input_hash=None):
+    """One document's rows (``QUAD_COLS``-ordered tuples) -> its
+    ``CANONICAL_SCHEMA`` result dict.  ``input_hash``: the document's
+    input hash when the caller already has it (the quad-table stage
+    rolls it up from Catalyst's per-row digests); otherwise it is
+    computed here from the rows."""
+    if input_hash is None:
+        input_hash = input_hash_of_rows(rows)
     if max_doc_quads and len(rows) > max_doc_quads:
         # Mega-document routing (SCALE.md): bound per-task memory by
         # refusing documents above the cap BEFORE materializing any
@@ -212,8 +238,15 @@ def _canonize_rows_for_url(url, rows, max_work_factor, doc_timeout_ms=0,
     }
 
 
-_COLS = ["s_kind", "s", "p", "o_kind", "o",
-         "o_datatype", "o_lang", "g_kind", "g"]
+def column_values(arr):
+    """``arr.to_pylist()`` for a string or integer Arrow array, built
+    through numpy: one C-level conversion per column instead of one
+    Python scalar per cell.  An integer array with nulls keeps
+    ``to_pylist``, because numpy would turn its values into floats and
+    change their ``str`` framing."""
+    if arr.null_count and pa.types.is_integer(arr.type):
+        return arr.to_pylist()
+    return arr.to_numpy(zero_copy_only=False).tolist()
 
 
 _ARROW_SCHEMA = to_arrow_schema(CANONICAL_SCHEMA)
@@ -241,45 +274,54 @@ def make_canonize_arrow_fn(max_work_factor=3, doc_timeout_ms=0,
     Requires rows sorted by url within each partition and each url
     wholly contained in one partition.  A url whose rows straddle an
     Arrow-batch boundary is carried into the next batch, so batch
-    boundaries never split a document's output.  The Arrow<->Python
-    boundary is raw ``to_pylist`` / ``RecordBatch.from_arrays``.
-    """
-    _kernel = kernel_fn or _canonize_rows_for_url
+    boundaries never split a document's output.
 
-    def canonize_doc(url, rows):
-        return _kernel(
+    Batch columns: ``url``, the nine ``QUAD_COLS`` and ``qh``, the
+    row's ``framing.ROW_DIGEST``.  The default kernel gets the
+    document's ``input_hash`` rolled up from the ``qh`` digests; a
+    ``kernel_fn`` is called with the six positional arguments and
+    computes its own.  Columns convert with ``column_values`` and
+    results leave through ``flush``.
+    """
+    n_cols = 1 + len(QUAD_COLS)
+
+    def canonize_doc(url, rows, digests):
+        if kernel_fn is not None:
+            return kernel_fn(
+                url, rows, max_work_factor, doc_timeout_ms, max_doc_quads,
+                message_digest_algorithm,
+            )
+        return _canonize_rows_for_url(
             url, rows, max_work_factor, doc_timeout_ms, max_doc_quads,
             message_digest_algorithm,
+            input_hash=input_hash_of_digests(digests),
         )
 
     def canonize_partition(batches):
         cur_url = None
-        cur_rows = []
+        cur_rows, cur_digests = [], []
         for batch in batches:
-            urls = batch.column(0).to_pylist()
+            urls = column_values(batch.column(0))
             if not urls:
                 continue
-            # C-speed row materialization: zip of column lists builds
-            # all row tuples without a per-cell Python loop
-            rows = list(
-                zip(
-                    *(
-                        batch.column(i).to_pylist()
-                        for i in range(1, batch.num_columns)
-                    )
-                )
-            )
+            # zip of column lists builds all row tuples without a
+            # per-cell Python loop
+            rows = zip(*(column_values(batch.column(i))
+                         for i in range(1, n_cols)))
+            digests = column_values(batch.column(n_cols))
             results = []
-            for u, row in zip(urls, rows):
+            for u, row, d in zip(urls, rows, digests):
                 if u != cur_url:
                     if cur_url is not None:
-                        results.append(canonize_doc(cur_url, cur_rows))
-                    cur_url, cur_rows = u, []
+                        results.append(
+                            canonize_doc(cur_url, cur_rows, cur_digests))
+                    cur_url, cur_rows, cur_digests = u, [], []
                 cur_rows.append(row)
+                cur_digests.append(d)
             if results:
                 yield flush(results)
         if cur_url is not None:
-            yield flush([canonize_doc(cur_url, cur_rows)])
+            yield flush([canonize_doc(cur_url, cur_rows, cur_digests)])
 
     return canonize_partition
 
@@ -295,8 +337,10 @@ def canonize_documents(
 ):
     """quads -> canonical_nquads(url, nquads, label_map, ...).
 
-    One path: ``select -> sortWithinPartitions('url') ->
-    mapInArrow(make_canonize_arrow_fn)``.  ``strategy`` only decides
+    One path: ``select(url, QUAD_COLS, ROW_DIGEST) ->
+    sortWithinPartitions('url') -> mapInArrow(make_canonize_arrow_fn)``;
+    the per-row input-hash digest is computed in Catalyst, the kernel
+    only rolls each document's digests up.  ``strategy`` only decides
     whether the input is hash-repartitioned by url first:
 
     * ``'colocated'`` (default) -- zero-shuffle.  Valid when each url's
@@ -312,8 +356,9 @@ def canonize_documents(
     Spark counterpart of the reference's native-implementation
     delegation point (``lib/index.js:90-95,151-162``, where a compiled
     rdf-canonize-native can replace the JS algorithm).  Signature and
-    return contract are ``_canonize_rows_for_url``'s (same ordered row
-    tuples in, same CANONICAL_SCHEMA dict out); the callable is
+    return contract are ``_canonize_rows_for_url``'s six positional
+    arguments (same ordered row tuples in, same CANONICAL_SCHEMA dict
+    out, ``input_hash`` included); the callable is
     serialized to executors, so an accelerated implementation (e.g. a
     C/Rust extension imported inside the function) plugs in without
     touching the Spark plumbing.
@@ -326,7 +371,8 @@ def canonize_documents(
         df = quads_df
     else:
         raise ValueError(f"unknown strategy: {strategy}")
-    return df.select("url", *_COLS).sortWithinPartitions("url").mapInArrow(
+    df = df.selectExpr("url", *QUAD_COLS, f"{ROW_DIGEST} AS qh")
+    return df.sortWithinPartitions("url").mapInArrow(
         make_canonize_arrow_fn(max_work_factor, doc_timeout_ms,
                                max_doc_quads, message_digest_algorithm,
                                kernel_fn),

@@ -3,8 +3,10 @@
 At 10^12 documents a daily recrawl changes a small fraction of pages;
 recanonicalizing everything wastes the cluster.  Every canonize output
 carries ``input_hash`` -- an order-independent content hash of the
-document's input quads, computed INSIDE the canonize kernel (the rows
-are already co-located there, so it costs zero extra shuffles) -- and
+document's input quads.  ``canonize_documents`` computes each row's
+digest in Catalyst, in the projection that feeds its kernel, and the
+kernel rolls up the digests of the document's rows, which are already
+co-located there, so it costs zero extra shuffles -- and
 ``incremental_canonize`` joins the new crawl's hashes against the
 prior output:
 
@@ -15,8 +17,9 @@ prior output:
 * changed/new url                  -> canonized fresh;
 * disappeared url                  -> dropped (not carried).
 
-Hash framing (shared byte-exact by the Python kernel, this module's
-relational form, and the DuckDB oracle): each quad field is
+Hash framing (``functions/framing.py``; shared byte-exact by the
+canonize stage, this module's relational form, the Python framing of
+the ``.nq`` file kernel and the DuckDB oracle): each quad field is
 byte-length-prefixed (``<len>:<value>``, null -> chr(0)) and joined
 with chr(31); per-row SHA-256 hex digests are deduplicated, sorted,
 concatenated and SHA-256'd again.  Length prefixes make a field
@@ -47,7 +50,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..functions.framing import framed_line, input_hash_agg
+from ..functions.framing import ROW_DIGEST, input_hash_agg
 from .canon_stage import canonize_documents
 
 
@@ -55,11 +58,12 @@ def input_quads_hash(quads_df):
     """(url, input_hash): order-independent content hash of each
     document's quads, relational form (one groupBy shuffle with
     map-side partial aggregation; used on the NEW crawl so the
-    expensive kernel only runs on changed documents).  Byte-identical
-    to the kernel-computed ``input_hash`` column -- parity is pinned by
-    tests and by the ``canonize_incremental`` driver oracle."""
+    expensive kernel only runs on changed documents).  The same per-row
+    digest as ``canonize_documents``, so byte-identical to its
+    ``input_hash`` column -- parity is pinned by tests and by the
+    ``canonize_incremental`` driver oracle."""
     return (
-        quads_df.select("url", F.sha2(framed_line(), 256).alias("qh"))
+        quads_df.selectExpr("url", f"{ROW_DIGEST} AS qh")
         .groupBy("url")
         .agg(input_hash_agg().alias("input_hash"))
     )

@@ -5,6 +5,11 @@ Settings chosen for the 100 TB design point (see README):
 * AQE on -- runtime shuffle coalescing + skew-join splitting.
 * Arrow on with a bounded ``maxRecordsPerBatch`` so a pathological
   document cannot blow executor memory inside the canonize kernel.
+* File listing on the driver up to ``_LISTING_PATHS`` paths.  A glob
+  of more than 32 paths (Spark's default threshold) otherwise starts
+  a parallel-listing Spark job while the DataFrame is built: for the
+  96 ``.nq`` fixtures at ``local[4]``, building the frame took
+  0.5-0.75 s with that job and under 0.1 s with driver listing.
 * ``shuffle.partitions`` sized per run (tests pass 32 to match the
   local[32] harness; a real cluster would use 2-3x total cores).
 """
@@ -14,6 +19,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_LISTING_PATHS = 1024
 
 
 def get_spark(
@@ -35,6 +42,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                str(_LISTING_PATHS))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )

@@ -39,6 +39,7 @@ from pyspark.sql.types import (
 from ..pipeline.canon_stage import (
     CANONICAL_SCHEMA,
     _canonize_rows_for_url,
+    column_values,
     flush,
 )
 from ..rdfc import nquads
@@ -88,7 +89,7 @@ def _parse_file(content):
     """One file's text -> ``(rows, error)``.
 
     ``rows`` are the file's quad-table term rows, ordered as
-    ``canon_stage._COLS`` (the tuples the canonize kernel takes); a
+    ``framing.QUAD_COLS`` (the tuples the canonize kernel takes); a
     whitespace-only file gives ``[]``.  A grammar error or an unpaired
     surrogate gives ``(None, <quarantine text>)``."""
     try:
@@ -128,8 +129,8 @@ _QUAD_ROWS_ARROW = to_arrow_schema(QUAD_ROWS_SCHEMA)
 def _parse_batch(batches):
     for batch in batches:
         out = []
-        for url, content in zip(batch.column(0).to_pylist(),
-                                batch.column(1).to_pylist()):
+        for url, content in zip(column_values(batch.column(0)),
+                                column_values(batch.column(1))):
             rows, error = _parse_file(content)
             if rows:
                 out.extend((url, *row, None) for row in rows)
@@ -174,8 +175,8 @@ def _canonize_file_batch(max_work_factor):
     def canonize_files(batches):
         for batch in batches:
             results = []
-            for url, content in zip(batch.column(0).to_pylist(),
-                                    batch.column(1).to_pylist()):
+            for url, content in zip(column_values(batch.column(0)),
+                                    column_values(batch.column(1))):
                 rows, error = _parse_file(content)
                 if error is None:
                     # an empty file's row set canonizes to '' with
@@ -202,7 +203,11 @@ def canonize_nquads_files(spark, path, max_work_factor=3):
     cross into the JVM and no shuffle by url.  The round-robin
     repartition spreads expensive (poison) files across cores.  A file
     that fails the grammar or holds an unpaired surrogate becomes a
-    row with only ``url`` and ``error`` set."""
+    row with only ``url`` and ``error`` set.  The rows never exist in
+    Catalyst, so the kernel frames ``input_hash`` in Python
+    (``canon_stage.input_hash_of_rows``); it equals the quad-table
+    path's hash from Catalyst's per-row digests (pinned by
+    tests/test_nquads_io.py)."""
     return (
         _files(spark, path)
         .repartition(spark.sparkContext.defaultParallelism)

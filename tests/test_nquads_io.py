@@ -8,6 +8,7 @@ checked row-for-row against the quad-table composition
 Python stage.
 """
 
+import glob
 import io
 import json
 import os
@@ -243,3 +244,37 @@ def test_nquads_deploy_parses_each_file_once(spark, fixture_dir):
     assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, plan
     assert "MapInPandas" not in plan, plan
     assert "Union" not in plan, plan
+
+
+@pytest.mark.parametrize("path", [DIR + "/*-in.nq", W3C_DIR + "/*-in.nq"],
+                         ids=["rdfc10", "w3c"])
+def test_input_hash_python_and_catalyst_framing_agree(spark, path):
+    """The file kernel frames ``input_hash`` in Python
+    (``input_hash_of_rows``); the quad-table path rolls it up from the
+    per-row digests Catalyst computes (``framing.ROW_DIGEST``).  Per
+    url the two must be equal for every file that parses; parse and
+    surrogate quarantines carry no hash.  ``max_work_factor=0`` stops
+    n-degree work early on both sides; the hash does not depend on it."""
+    files = {r["url"]: r["input_hash"]
+             for r in canonize_nquads_files(spark, path, max_work_factor=0)
+             .filter("input_hash IS NOT NULL AND n_quads > 0").collect()}
+    table = {r["url"]: r["input_hash"]
+             for r in canonize_documents(
+                 quad_rows(read_nquads(spark, path)), max_work_factor=0,
+                 strategy="repartition").collect()}
+    assert len(table) > 50
+    assert files == table
+
+
+def test_glob_of_many_files_starts_no_listing_job(spark):
+    """Building the frame over a 96-file glob lists the files on the
+    driver: no parallel-listing Spark job starts before an action."""
+    assert len(glob.glob(DIR + "/*-in.nq")) == 96
+    sc = spark.sparkContext
+    group = "nq-glob-listing"
+    sc.setJobGroup(group, group)
+    try:
+        canonize_nquads_files(spark, DIR + "/*-in.nq")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

@@ -7,6 +7,7 @@ itself differential-tested against the reference).
 """
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,6 +15,7 @@ from rdf_canonize_spark.pipeline.canon_stage import (
     CANONICAL_SCHEMA,
     _canonize_rows_for_url,
     canonize_documents,
+    column_values,
     rows_to_dataset,
 )
 from rdf_canonize_spark.pipeline.extract import (
@@ -558,6 +560,29 @@ def test_input_hash_kernel_relational_parity_and_framing(spark, pages):
               df, max_work_factor=3, strategy="repartition"
           ).collect()}
     assert kh == h
+
+
+@pytest.mark.parametrize("arr", [
+    pa.array(["a", None, "", "\U0001F600 astral", "\ue000\ufffd\uffff",
+              "\x00\x1f"], pa.string()),
+    pa.array([None, None], pa.string()),
+    pa.array([0, 1, 3, 2, -7], pa.int32()),
+    pa.array([0, None, 2], pa.int32()),
+    pa.array([2 ** 40, None], pa.int64()),
+    pa.array(["w", "x", None, "y", "z"]).slice(1, 3),
+    pa.array([5, None, 7, 8], pa.int32()).slice(2, 2),
+    pa.array([5, None, 7, 8], pa.int32()).slice(0, 3),
+], ids=["str-mixed", "str-all-null", "int", "int-null", "int64-null",
+        "str-sliced", "int-sliced-no-null", "int-sliced-null"])
+def test_column_values_equals_to_pylist(arr):
+    """The kernel's Arrow -> Python conversion returns exactly
+    ``to_pylist()``: same values and same types (numpy turns an int
+    column with nulls into floats and NaN, so those keep
+    ``to_pylist``)."""
+    got = column_values(arr)
+    want = arr.to_pylist()
+    assert got == want
+    assert [type(v) for v in got] == [type(v) for v in want]
 
 
 def test_canonize_colocated_from_bucketed_storage(spark, tmp_path,

@@ -27,7 +27,9 @@ def test_deploy_runs_python_only_in_the_kernel(spark):
     """The runner's one-boundary claim: the deploy's canonize plan has
     exactly one Python stage (the ``MapInArrow`` kernel) and no
     ``ExistingRDD`` scan, whose every evaluation -- broadcasts included
-    -- would run Python workers.  The gazetteer is a JVM local
+    -- would run Python workers.  The projection feeding the kernel
+    computes each row's input-hash digest (``sha2``) in the JVM, and
+    the colocated plan has no shuffle.  The gazetteer is a JVM local
     relation holding exactly the known-entity dictionary."""
     from rdf_canonize_spark.pipeline.gazetteer import (
         KNOWN_SURFACES,
@@ -40,6 +42,14 @@ def test_deploy_runs_python_only_in_the_kernel(spark):
     plan = checks.executed_plan(canon)
     assert "ExistingRDD" not in plan, plan
     assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, plan
+    # below the kernel: its url sort, then the digest projection
+    nodes = [line.lstrip(" :+-") for line in plan.splitlines()]
+    below = nodes[next(i for i, n in enumerate(nodes)
+                       if n.startswith("MapInArrow")) + 1:]
+    assert below[0].startswith("Sort [url"), plan
+    assert below[1].startswith("Project ["), plan
+    assert re.search(r"\bsha2\(.* AS qh#", below[1]), plan
+    assert checks.count_shuffles(canon) == 0, plan
 
     gaz = gazetteer_df(spark)
     gaz_plan = checks.executed_plan(gaz)
