@@ -33,9 +33,12 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from ..session import pin_archive_importers
+
 
 def _spacesaving_partition(col, k):
     def sketch(batches):
+        pin_archive_importers()
         counters = {}
         n_rows = 0
         for pdf in batches:

@@ -29,7 +29,15 @@ Scale properties:
 * document size is bounded upstream (documents are pages, not the
   corpus); ``spark.sql.execution.arrow.maxRecordsPerBatch`` caps Arrow
   batches, and a document straddling a batch boundary is carried into
-  the next batch.
+  the next batch;
+* a task's fixed Python cost is kept small: the partition function
+  first calls ``session.pin_archive_importers``, so the tasks after
+  the first in a reused Python worker (``spark.python.worker.reuse``,
+  on by default) no longer re-read ``pyspark.zip`` and the
+  ``spark-core`` jar when PySpark invalidates the import caches at
+  task start.  The pin is exact: Spark's archives do not change while
+  an executor runs, directory finders are still invalidated, and an
+  archive put on ``sys.path`` later gets a fresh importer.
 """
 
 from __future__ import annotations
@@ -51,6 +59,7 @@ from pyspark.sql.types import (
 from ..functions.framing import QUAD_COLS, ROW_DIGEST
 from ..rdfc.canonize import RDFC10
 from ..rdfc.terms import BLANK, DEFAULT_GRAPH, LITERAL, XSD_STRING
+from ..session import pin_archive_importers
 
 CANONICAL_SCHEMA = StructType(
     [
@@ -298,6 +307,7 @@ def make_canonize_arrow_fn(max_work_factor=3, doc_timeout_ms=0,
         )
 
     def canonize_partition(batches):
+        pin_archive_importers()
         cur_url = None
         cur_rows, cur_digests = [], []
         for batch in batches:

@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..session import pin_archive_importers
+
 # one statement: "KG: <s> <rel> <o> ."
 STATEMENT_PATTERN = r"KG: (\S+ \S+ \S+) \."
 
@@ -51,6 +53,7 @@ def _detect_statements_udf():
     @pandas_udf("array<string>")
     def detect(text: pd.Series) -> pd.Series:
         """Arrow-batched detector: one regex pass per batch."""
+        pin_archive_importers()
         return text.str.findall(STATEMENT_PATTERN)
 
     return detect

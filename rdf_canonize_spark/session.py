@@ -12,11 +12,16 @@ Settings chosen for the 100 TB design point (see README):
   0.5-0.75 s with that job and under 0.1 s with driver listing.
 * ``shuffle.partitions`` sized per run (tests pass 32 to match the
   local[32] harness; a real cluster would use 2-3x total cores).
+
+Worker side, ``pin_archive_importers`` is the first call of every
+Python function the package ships to executors (see its docstring).
 """
 
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -51,3 +56,29 @@ def get_spark(
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _keep_directory():
+    """``zipimporter.invalidate_caches`` stand-in: keep the directory
+    read when the importer was made."""
+
+
+def pin_archive_importers():
+    """Stop ``importlib.invalidate_caches()`` from re-reading the
+    archives on this Python worker's ``sys.path``.
+
+    PySpark's ``worker_util.setup_spark_files`` calls
+    ``importlib.invalidate_caches()`` at the start of every task, also
+    in a reused worker, and on Python 3.11 each ``zipimporter`` in
+    ``sys.path_importer_cache`` then reads its archive's whole central
+    directory again: ``pyspark.zip`` once per imported sub-package and
+    the ``spark-core`` jar (5,359 entries, no ``.py`` file) twice.
+    Spark's archives do not change while an executor runs, so the
+    directory each importer read first stays exact.  Directory finders
+    are still invalidated, and an archive added to ``sys.path`` later
+    gets a fresh, unpinned importer.  Only the tasks after the first
+    in a worker gain, so this relies on ``spark.python.worker.reuse``
+    (on by default)."""
+    for finder in list(sys.path_importer_cache.values()):
+        if isinstance(finder, zipimport.zipimporter):
+            finder.invalidate_caches = _keep_directory

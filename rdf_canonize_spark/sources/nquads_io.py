@@ -14,9 +14,10 @@ error on line N.`` text, which lands in an ``error`` column
   quad-table schema, for callers that compose with the quad-table
   operators (``canonize_documents`` with other settings, relabel).
 
-Sink: canonical per-document N-Quads back to text, plus a
-single-file globally-sorted dump (explicit ``orderBy`` -- determinism
-at dataset level only ever comes from an explicit sort).
+Sink: ``write_canonical_nquads`` writes each canonized document back
+to text as a ``# <url>`` line followed by its canonical lines, one
+file per partition and in no global order; quarantined documents are
+skipped.
 
 At scale: file-granular parallelism; the deploy path's only exchange
 is a round-robin repartition of the file rows across cores.
@@ -44,6 +45,7 @@ from ..pipeline.canon_stage import (
 )
 from ..rdfc import nquads
 from ..rdfc.terms import LITERAL
+from ..session import pin_archive_importers
 
 QUAD_ROWS_SCHEMA = StructType(
     [
@@ -127,6 +129,7 @@ _QUAD_ROWS_ARROW = to_arrow_schema(QUAD_ROWS_SCHEMA)
 
 
 def _parse_batch(batches):
+    pin_archive_importers()
     for batch in batches:
         out = []
         for url, content in zip(column_values(batch.column(0)),
@@ -173,6 +176,7 @@ _NULL_RESULT = dict.fromkeys(CANONICAL_SCHEMA.fieldNames())
 
 def _canonize_file_batch(max_work_factor):
     def canonize_files(batches):
+        pin_archive_importers()
         for batch in batches:
             results = []
             for url, content in zip(column_values(batch.column(0)),

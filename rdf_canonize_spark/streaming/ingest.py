@@ -145,6 +145,8 @@ def start_session_stream(spark, in_dir, out_dir, gap_seconds=1800,
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
+    from ..session import pin_archive_importers
+
     events = (
         spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", 8)
@@ -159,6 +161,7 @@ def start_session_stream(spark, in_dir, out_dir, gap_seconds=1800,
     state_type = "start_s double, end_s double, n long, v double"
 
     def sessionize(key, pdf_iter, state):
+        pin_archive_importers()
         user = key[0]
         closed = []
         if state.hasTimedOut:

@@ -653,6 +653,36 @@ def test_pluggable_kernel_seam(spark):
         assert r["quads_hash"] == base[url]["quads_hash"]
 
 
+def test_worker_archive_importers_pinned(spark):
+    """Inside the canonize stage every archive importer on the worker
+    is pinned (``session.pin_archive_importers``) before a document
+    reaches the kernel."""
+    schema = ("url string, s_kind int, s string, p string, o_kind int, "
+              "o string, o_datatype string, o_lang string, g_kind int, "
+              "g string")
+    rows = [(f"u:{d}", 1, "b0", "http://x.example/p", 2, f"v{d}", None,
+             None, 3, "") for d in range(8)]
+    df = spark.createDataFrame(rows, schema)
+
+    def pin_report_kernel(url, rows_, wf, timeout, cap, digest):
+        import sys
+        import zipimport
+
+        zips = [f for f in list(sys.path_importer_cache.values())
+                if isinstance(f, zipimport.zipimporter)]
+        pinned = sum("invalidate_caches" in vars(f) for f in zips)
+        r = _canonize_rows_for_url(url, rows_, wf, timeout, cap, digest)
+        r["error"] = "%d/%d" % (pinned, len(zips))
+        return r
+
+    reports = [r["error"] for r in canonize_documents(
+        df, strategy="repartition", kernel_fn=pin_report_kernel).collect()]
+    assert len(reports) == 8
+    for report in reports:
+        pinned, total = report.split("/")
+        assert int(total) > 0 and pinned == total, reports
+
+
 @pytest.mark.parametrize(
     "strategy", ["grouped", "colocated_pandas", "hybrid", "auto"]
 )
